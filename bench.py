@@ -383,6 +383,23 @@ def _cpu_ceiling() -> dict:
     return out
 
 
+def _ran_campaign(sc: dict) -> bool:
+    """True iff ``sc`` holds a completed scaling campaign: an N->4N
+    median over at least one round, every round timed at both widths,
+    and a measured local[32] leg."""
+    rounds = sc.get("rounds") or []
+    return (
+        "efficiency" in sc
+        and bool(rounds)
+        and all(
+            r.get(k)
+            for r in rounds
+            for k in ("thr_local4", "thr_local16", "wall_local4", "wall_local16")
+        )
+        and bool(sc.get("thr_local32"))
+    )
+
+
 def _write_report(result: dict) -> None:
     os.makedirs("BENCH", exist_ok=True)
     sc = result.get("scaling") or {}
@@ -535,7 +552,9 @@ def _write_report(result: dict) -> None:
     # history log: BENCH/BASELINE.md is regenerated per run, so without
     # this the previous runs' medians would be silently discarded —
     # run-to-run noise is part of the evidence, not something to hide.
-    if not SKIP_SCALING and sc and "efficiency" in sc:
+    # Only a campaign that ran may append: a stub or partial scaling
+    # dict (tests, smoke runs) must never become a history row.
+    if not SKIP_SCALING and _ran_campaign(sc):
         ceil = sc.get("cpu_ceiling", {})
         try:
             import subprocess

@@ -1,18 +1,28 @@
-"""The distributed extraction job (flagship query).
+"""The distributed extraction job (flagship query) and its one planner.
 
-Plan shape (SURVEY.md §3 lifecycle mapping):
+Plan shape (SURVEY.md §3 lifecycle mapping).  Every feed hands its
+span x sidecar join to ``_plan``; the direct feed (extract_spans)
+builds the join as below, the warehouse feed (warehouse.py) from
+doc_id-bucketed scans with no input exchange at all:
 
     documents (nested spans)   layout_blocks (sidecar)
-        |  posexplode               |
+        |  explode                  |
      repartition(P, doc_id)     repartition(P, doc_id)
         +--- shuffled-hash equi-join on (doc_id, offset) ---+
             (co-partitioned: the join adds NO exchange and
              its output stays doc_id-clustered)
                                 |
-          mapInPandas(whole-partition kernel: pandas lexsort by
-          (doc_id, page, offset), then per-doc page extraction)
+              mega-doc router (_route_mega) splits by doc_id
+             |                                      |
+     doc kernel: whole docs,          page kernel: (doc_id, page)-salted,
+     doc-wide order in-kernel         page_pos + page-base window
+             +------------ unionByName -------------+
                                 |
                        span rows / nested docs out
+
+Both kernels run the one driver, ``_doc_mode_kernel``: a pandas lexsort
+by (doc_id, page, offset), then one page call per page — the flagship
+``extract_page`` or, with ``dual=True``, its pdf2txt.py variant.
 
 Scale design (SURVEY.md §4.3):
 
@@ -32,13 +42,18 @@ Scale design (SURVEY.md §4.3):
   that serialized against the python workers inside one stage.
 * **Two-path skew routing.**  A mega-document (>= ``mega_threshold``
   spans) would serialize a whole partition in the doc-grouped path, so
-  docs are routed by span count: normal docs take the single-shuffle
-  doc path (reading order assigned inside the kernel); mega docs are
-  re-keyed by (doc_id, page) — the salt — and their doc-wide order is
-  recovered with a window over the (much smaller) span output.  The
-  mega id set is obtained from a map-side-combined count (or free from
-  ``size(spans)`` on the nested input) and is broadcast as an isin
-  filter.
+  docs are routed by span count: normal docs take the doc kernel;
+  mega docs are re-keyed by (doc_id, page) — the salt — and their
+  doc-wide order is recovered with a window over the (much smaller)
+  span output.  The router counts the flat sidecar (the doc_id column
+  only, map-side-combined) and collects the mega ids: the resulting
+  ``doc_id IN (...)`` predicates are pushed by Catalyst through the
+  join into BOTH parquet scans (InSet, O(1) probe), so each union
+  branch scans and joins only its own documents.  A derived-column
+  flag (``size(spans) >= T``) cannot be pushed below the join and was
+  measured ~3x slower at 240k docs.  Mega docs are a skew tail, so the
+  list stays tiny; past MAX_MEGA_INLIST ids routing falls back to a
+  broadcast semi/anti join rather than bloat the plan with a literal.
 * **No per-row Python** anywhere; only the columns the kernel needs
   cross the Arrow boundary (pandas UDFs are a pushdown barrier, so
   cheap filters/pruning happen before the shuffle by construction).
@@ -46,7 +61,7 @@ Scale design (SURVEY.md §4.3):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence
+from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
@@ -167,17 +182,6 @@ def _page_dual(cols: _Cols, ps: int, pe: int, cfg: ExtractConfig):
     )
 
 
-def _run_pages(cols: _Cols, s: int, e: int, cfg: ExtractConfig, page_fn=_page_e1):
-    """Run page_fn per page of rows [s:e) of one doc (sorted by
-    (page, ...)); yields (page, spans)."""
-    pages = cols.page[s:e]
-    bounds = np.flatnonzero(pages[1:] != pages[:-1]) + 1 + s
-    starts = np.concatenate(([s], bounds))
-    ends = np.concatenate((bounds, [e]))
-    for ps, pe in zip(starts, ends):
-        yield int(cols.page[ps]), page_fn(cols, ps, pe, cfg)
-
-
 def _sorted_partition_chunks(
     batches: Iterator[pd.DataFrame], sort_cols: list
 ) -> Iterator[pd.DataFrame]:
@@ -214,71 +218,50 @@ def _sorted_partition_chunks(
 
 
 def _doc_mode_kernel(cfg: ExtractConfig, page_fn=_page_e1,
-                     sort_cols=("doc_id", "page", "offset")):
-    """mapInPandas fn: whole docs per chunk, doc-wide order in-kernel."""
+                     sort_cols=("doc_id", "page", "offset"),
+                     page_local: bool = False):
+    """mapInPandas fn, the one kernel driver: runs ``page_fn`` on every
+    page of every doc-contiguous chunk.  Emits DOC_OUT_SCHEMA rows with
+    the doc-wide ``order``, or with ``page_local=True`` (the mega-doc
+    path) PAGE_OUT_SCHEMA rows ordered within their page."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for chunk in _sorted_partition_chunks(batches, list(sort_cols)):
             cols = _Cols(chunk)
-            out_doc, out_order, out_kind, out_text, out_media = [], [], [], [], []
-            ids = cols.doc_id
-            starts = np.concatenate(
-                ([0], np.flatnonzero(ids[1:] != ids[:-1]) + 1)
-            )
-            ends = np.concatenate((starts[1:], [len(ids)]))
+            ids, pages = cols.doc_id, cols.page
+            new_doc = np.concatenate(([True], ids[1:] != ids[:-1]))
+            new_page = new_doc.copy()
+            new_page[1:] |= pages[1:] != pages[:-1]
+            starts = np.flatnonzero(new_page)
+            ends = np.append(starts[1:], cols.n)
+            spans, counts = [], []
             for s, e in zip(starts, ends):
-                doc_id = ids[s]
-                pos = 0
-                for _page, spans in _run_pages(cols, s, e, cfg, page_fn):
-                    for kind, text, media in spans:
-                        out_doc.append(doc_id)
-                        out_order.append(pos)
-                        out_kind.append(kind)
-                        out_text.append(text)
-                        out_media.append(media)
-                        pos += 1
+                page_spans = page_fn(cols, s, e, cfg)
+                spans += page_spans
+                counts.append(len(page_spans))
+            # per-page counts -> per-span columns: each span's page row,
+            # and its position counted from the first span of its page
+            # (page-local) or of its doc
+            counts = np.asarray(counts, dtype=np.int64)
+            first = np.cumsum(counts) - counts
+            if not page_local:
+                first = np.maximum.accumulate(
+                    np.where(new_doc[starts], first, 0)
+                )
+            row = np.repeat(starts, counts)
+            pos = np.arange(len(spans)) - np.repeat(first, counts)
+            pos = pos.astype(np.int32)
+            if page_local:
+                head = {"page": pages[row].astype(np.int32), "page_pos": pos}
+            else:
+                head = {"order": pos}
             yield pd.DataFrame(
                 {
-                    "doc_id": pd.Series(out_doc, dtype=object),
-                    "order": pd.Series(out_order, dtype="int32"),
-                    "kind": pd.Series(out_kind, dtype=object),
-                    "text": pd.Series(out_text, dtype=object),
-                    "media_ref": pd.Series(out_media, dtype=object),
-                }
-            )
-
-    return run
-
-
-def _page_mode_kernel(cfg: ExtractConfig, page_fn=_page_e1,
-                      sort_cols=("doc_id", "page", "offset")):
-    """mapInPandas fn for the mega-doc path: emits page-local order."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for chunk in _sorted_partition_chunks(batches, list(sort_cols)):
-            cols = _Cols(chunk)
-            out = {k: [] for k in
-                   ("doc_id", "page", "page_pos", "kind", "text", "media_ref")}
-            ids = cols.doc_id
-            starts = np.concatenate(([0], np.flatnonzero(ids[1:] != ids[:-1]) + 1))
-            ends = np.concatenate((starts[1:], [len(ids)]))
-            for s, e in zip(starts, ends):
-                for page, spans in _run_pages(cols, s, e, cfg, page_fn):
-                    for pos, (kind, text, media) in enumerate(spans):
-                        out["doc_id"].append(ids[s])
-                        out["page"].append(page)
-                        out["page_pos"].append(pos)
-                        out["kind"].append(kind)
-                        out["text"].append(text)
-                        out["media_ref"].append(media)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype=object),
-                    "page": pd.Series(out["page"], dtype="int32"),
-                    "page_pos": pd.Series(out["page_pos"], dtype="int32"),
-                    "kind": pd.Series(out["kind"], dtype=object),
-                    "text": pd.Series(out["text"], dtype=object),
-                    "media_ref": pd.Series(out["media_ref"], dtype=object),
+                    "doc_id": pd.Series(ids[row], dtype=object),
+                    **head,
+                    "kind": pd.Series([sp[0] for sp in spans], dtype=object),
+                    "text": pd.Series([sp[1] for sp in spans], dtype=object),
+                    "media_ref": pd.Series([sp[2] for sp in spans], dtype=object),
                 }
             )
 
@@ -350,45 +333,36 @@ def _kernel_partitions(df: DataFrame) -> int:
 MAX_MEGA_INLIST = 10_000
 
 
-def _mode_parts(pruned: DataFrame, dual: bool):
-    """(page_fn, sort_cols) for the kernel given the frame's columns.
+def _kernel(pruned: DataFrame, cfg: ExtractConfig, dual: bool,
+            page_local: bool = False, clustered: bool = False) -> DataFrame:
+    """One mapInPandas kernel stage over ``pruned``.  Doc mode groups
+    whole docs, re-shuffling by doc_id unless ``clustered`` promises the
+    input is hash(doc_id)-clustered already (e.g. the output of a join
+    whose children were distributed by doc_id); page-local mode salts
+    by (doc_id, page) so a mega doc spreads over many tasks.
 
     Multi-detector frames carry a ``det`` column; rows must then sort
     detector-major within a page (Layout.merge appends detector 2's
     blocks after detector 1's, base_pipeline.py:104-111) with offset as
     the in-detector order — a total, deterministic key either way.
     """
-    page_fn = _page_dual if dual else _page_e1
     if "det" in pruned.columns:
-        return page_fn, ("doc_id", "page", "det", "offset")
-    return page_fn, ("doc_id", "page", "offset")
-
-
-def _extract_doc_path(
-    pruned: DataFrame,
-    cfg: ExtractConfig,
-    pre_partitioned: bool = False,
-    dual: bool = False,
-) -> DataFrame:
-    """Doc-grouped kernel.  ``pre_partitioned=True`` promises the input
-    is already hash(doc_id)-clustered (e.g. the output of a join whose
-    children were repartitioned by doc_id), so only a partition-local
-    sort is needed — no exchange."""
-    if pre_partitioned:
-        shaped = pruned
+        sort_cols = ("doc_id", "page", "det", "offset")
     else:
-        shaped = pruned.repartition(_kernel_partitions(pruned), "doc_id")
-    page_fn, sort_cols = _mode_parts(pruned, dual)
-    return shaped.mapInPandas(
-        _doc_mode_kernel(cfg, page_fn, sort_cols), schema=DOC_OUT_SCHEMA
+        sort_cols = ("doc_id", "page", "offset")
+    if not clustered:
+        keys = ("doc_id", "page") if page_local else ("doc_id",)
+        pruned = pruned.repartition(_kernel_partitions(pruned), *keys)
+    fn = _doc_mode_kernel(
+        cfg, _page_dual if dual else _page_e1, sort_cols, page_local
+    )
+    return pruned.mapInPandas(
+        fn, schema=PAGE_OUT_SCHEMA if page_local else DOC_OUT_SCHEMA
     )
 
 
-def _extract_page_path(
-    pruned: DataFrame, cfg: ExtractConfig, dual: bool = False
-) -> DataFrame:
-    """Mega-doc path: page-salted kernel, then a distributed two-level
-    doc-wide ordering.
+def _doc_order(pages: DataFrame) -> DataFrame:
+    """Page-local kernel output -> doc-wide order, distributed.
 
     The naive ordering (row_number over partitionBy(doc_id)) would pull
     every output span of a mega doc through one task.  Instead the
@@ -401,12 +375,6 @@ def _extract_page_path(
     the count branch and the join branch consume it — without that the
     kernel would run twice.
     """
-    # salt = page: mega docs spread across partitions by (doc_id, page)
-    shaped = pruned.repartition(_kernel_partitions(pruned), "doc_id", "page")
-    page_fn, sort_cols = _mode_parts(pruned, dual)
-    pages = shaped.mapInPandas(
-        _page_mode_kernel(cfg, page_fn, sort_cols), schema=PAGE_OUT_SCHEMA
-    )
     pages = pages.localCheckpoint(eager=False)
     pcounts = pages.groupBy("doc_id", "page").agg(
         F.count(F.lit(1)).alias("n_spans")
@@ -417,15 +385,67 @@ def _extract_page_path(
         "page",
         (F.sum("n_spans").over(wp) - F.col("n_spans")).alias("page_base"),
     )
-    return (
-        pages.join(bases, ["doc_id", "page"])
-        .select(
-            "doc_id",
-            (F.col("page_base") + F.col("page_pos")).cast("int").alias("order"),
-            "kind",
-            "text",
-            "media_ref",
-        )
+    return pages.join(bases, ["doc_id", "page"]).select(
+        "doc_id",
+        (F.col("page_base") + F.col("page_pos")).cast("int").alias("order"),
+        "kind", "text", "media_ref",
+    )
+
+
+def _route_mega(counted: DataFrame, mega_threshold: int):
+    """The mega-doc router: ids of the docs with >= ``mega_threshold``
+    rows in ``counted``, as a collected list — or, past MAX_MEGA_INLIST
+    ids, as the id DataFrame itself."""
+    counts = counted.groupBy("doc_id").count()
+    big = counts.filter(F.col("count") >= mega_threshold).select("doc_id")
+    sample = big.limit(MAX_MEGA_INLIST + 1).collect()
+    if len(sample) > MAX_MEGA_INLIST:
+        return big
+    return [r["doc_id"] for r in sample]
+
+
+def _plan(joined: DataFrame, cfg: ExtractConfig,
+          mega_threshold: int = MEGA_THRESHOLD, dual: bool = False,
+          counted: Optional[DataFrame] = None, clustered: bool = False,
+          page_local: bool = False) -> DataFrame:
+    """The one extraction plan every feed builds: prune ``joined`` (a
+    flat span x sidecar frame) to the kernel columns, route mega docs
+    to the page-salted kernel and the rest to the doc kernel, and union
+    the two.  Feeds differ only in how they build the join, which
+    they describe to the plan with:
+
+    * ``counted`` — the frame the router counts (default: ``joined``);
+    * ``clustered`` — ``joined`` is hash(doc_id)-clustered already, so
+      the doc kernel needs no exchange of its own;
+    * ``page_local`` — return the page-salted kernel output as is,
+      (page, page_pos) without the doc-wide order.
+
+    ``mega_threshold=0`` sends every doc down the page path and
+    ``mega_threshold<0`` every doc down the doc path, both unrouted.
+    """
+    cols = list(KERNEL_COLS)
+    if "det" in joined.columns:
+        cols.append("det")
+    if dual:
+        cols += DUAL_EXTRA_COLS
+    pruned = joined.select(*cols)
+    if page_local or mega_threshold == 0:
+        pages = _kernel(pruned, cfg, dual, page_local=True)
+        return pages if page_local else _doc_order(pages)
+    mega = []
+    if mega_threshold > 0:
+        mega = _route_mega(pruned if counted is None else counted, mega_threshold)
+    if isinstance(mega, DataFrame):
+        ids = F.broadcast(mega)
+        normal = pruned.join(ids, "doc_id", "left_anti")
+        big = pruned.join(ids, "doc_id", "left_semi")
+    elif mega:
+        hit = F.col("doc_id").isin(mega)
+        normal, big = pruned.filter(~hit), pruned.filter(hit)
+    else:
+        return _kernel(pruned, cfg, dual, clustered=clustered)
+    return _kernel(normal, cfg, dual, clustered=clustered).unionByName(
+        _doc_order(_kernel(big, cfg, dual, page_local=True))
     )
 
 
@@ -437,26 +457,13 @@ def extract_pages(
     diagnostics and by the SQL-oracle-checkable flagship slice
     (registry.q_flagship_simple), where per-page positions are the
     comparable unit."""
-    cols = list(KERNEL_COLS)
-    if "det" in joined.columns:
-        cols.append("det")
-    if dual:
-        cols += DUAL_EXTRA_COLS
-    pruned = joined.select(*cols)
-    shaped = pruned.repartition(_kernel_partitions(pruned), "doc_id", "page")
-    page_fn, sort_cols = _mode_parts(pruned, dual)
-    return shaped.mapInPandas(
-        _page_mode_kernel(cfg, page_fn, sort_cols), schema=PAGE_OUT_SCHEMA
-    )
+    return _plan(joined, cfg, dual=dual, page_local=True)
 
 
 def extract_spans_flat(
     joined: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     mega_threshold: int = MEGA_THRESHOLD,
-    mega_ids: Optional[Sequence[str]] = None,
-    pre_partitioned: bool = False,
-    mega_ids_df: Optional[DataFrame] = None,
     dual: bool = False,
 ) -> DataFrame:
     """Extraction over an already-joined flat frame with KERNEL_COLS
@@ -464,51 +471,12 @@ def extract_spans_flat(
     ``dual=True``).
 
     Returns span rows (doc_id, order, kind, text, media_ref).  Docs
-    with >= mega_threshold spans are routed to the page-salted path;
-    pass ``mega_ids`` if the caller already knows them (e.g. from
-    ``size(spans)``), else they are found with a count aggregation.
-    Set ``mega_threshold=0`` to disable routing (all docs page path)
-    or ``mega_threshold<0`` to force the doc path.
-    ``pre_partitioned`` promises the frame is hash(doc_id)-clustered
-    already, letting the normal-doc kernel skip its exchange.
-    ``mega_ids_df`` (single ``doc_id`` column) routes via broadcast
-    semi/anti joins instead of an IN-list — the fat-skew-tail fallback.
+    with >= mega_threshold spans, found by counting the frame itself,
+    are routed to the page-salted path.  Set ``mega_threshold=0`` to
+    disable routing (all docs page path) or ``mega_threshold<0`` to
+    force the doc path.
     """
-    cols = list(KERNEL_COLS)
-    if "det" in joined.columns:
-        cols.append("det")
-    if dual:
-        cols += DUAL_EXTRA_COLS
-    pruned = joined.select(*cols)
-    if mega_threshold < 0:
-        return _extract_doc_path(pruned, cfg, pre_partitioned, dual)
-    if mega_threshold == 0:
-        return _extract_page_path(pruned, cfg, dual)
-
-    if mega_ids is None and mega_ids_df is None:
-        counts = pruned.groupBy("doc_id").count()
-        big = counts.filter(F.col("count") >= mega_threshold).select("doc_id")
-        sample = big.limit(MAX_MEGA_INLIST + 1).collect()
-        if len(sample) > MAX_MEGA_INLIST:
-            mega_ids_df = big
-        else:
-            mega_ids = [r["doc_id"] for r in sample]
-
-    if mega_ids_df is not None:
-        normal = pruned.join(F.broadcast(mega_ids_df), "doc_id", "left_anti")
-        mega = pruned.join(F.broadcast(mega_ids_df), "doc_id", "left_semi")
-        return _extract_doc_path(normal, cfg, pre_partitioned, dual).unionByName(
-            _extract_page_path(mega, cfg, dual)
-        )
-
-    if not mega_ids:
-        return _extract_doc_path(pruned, cfg, pre_partitioned, dual)
-
-    normal = pruned.filter(~F.col("doc_id").isin(list(mega_ids)))
-    mega = pruned.filter(F.col("doc_id").isin(list(mega_ids)))
-    return _extract_doc_path(normal, cfg, pre_partitioned, dual).unionByName(
-        _extract_page_path(mega, cfg, dual)
-    )
+    return _plan(joined, cfg, mega_threshold, dual)
 
 
 def extract_spans(
@@ -516,6 +484,7 @@ def extract_spans(
     layout_blocks,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     mega_threshold: int = MEGA_THRESHOLD,
+    dual: bool = False,
 ) -> DataFrame:
     """Flagship: nested documents + geometry sidecar(s) -> ordered spans.
 
@@ -526,16 +495,14 @@ def extract_spans(
     order (detector-major) and the J1 overlap merge dedups the
     cross-detector duplicates.
 
-    Mega-doc routing uses a driver-collected mega id list: the
-    resulting ``doc_id IN (...)`` predicates are pushed by Catalyst
-    through the join into BOTH parquet scans (InSet, O(1) probe), so
-    each union branch scans and joins only its own documents.  A
-    derived-column flag (``size(spans) >= T``) cannot be pushed below
-    the join and was measured ~3x slower at 240k docs.  Mega docs are
-    rare by definition (skew tail), so the collected list stays tiny —
-    but a pathological fat tail (> MAX_MEGA_INLIST ids) would bloat the
-    plan with a huge literal, so routing falls back to a broadcast
-    semi/anti join of the id set past that threshold.
+    ``dual=True`` runs the dual-source (E2, pdf2txt.py) kernel: the
+    sidecar additionally carries the per-row OCR output and the
+    text-layer rect in PDF coords (DUAL_EXTRA_COLS); the kernel
+    arbitrates OCR vs native text per block (levenshtein < 0.2 prefers
+    native) after the C7 flip+descale.
+
+    Mega docs are routed by counting the PRIMARY sidecar (module
+    docstring, "Two-path skew routing").
     """
     if isinstance(layout_blocks, DataFrame):
         sidecars = [layout_blocks]
@@ -549,21 +516,6 @@ def extract_spans(
             sidecar = sidecar.unionByName(
                 s.withColumn("det", F.lit(i).cast("int"))
             )
-
-    mega_ids: Optional[list] = None
-    mega_ids_df: Optional[DataFrame] = None
-    if mega_threshold > 0:
-        # span count per doc from the PRIMARY flat sidecar: scans only
-        # the doc_id column, map-side-combines, shuffles tiny partial
-        # counts — far cheaper than size(spans), which would read the
-        # whole nested spans column.
-        counts = sidecars[0].groupBy("doc_id").count()
-        big = counts.filter(F.col("count") >= mega_threshold).select("doc_id")
-        sample = big.limit(MAX_MEGA_INLIST + 1).collect()
-        if len(sample) > MAX_MEGA_INLIST:
-            mega_ids_df = big
-        else:
-            mega_ids = [r["doc_id"] for r in sample]
     # Pre-partition BOTH join inputs by doc_id: HashPartitioning(doc_id)
     # satisfies the join's ClusteredDistribution(doc_id, offset), so the
     # join adds no exchange of its own AND its output stays clustered by
@@ -572,20 +524,18 @@ def extract_spans(
     # warehouse scale the same effect comes from bucketing both tables
     # by doc_id (warehouse.extract_from_warehouse — ZERO input shuffle);
     # this is the unbucketed equivalent.
-    spark = documents.sparkSession
-    subset_ok = doc_clustering_safe(spark)
     spans = explode_documents(documents)
     P = _kernel_partitions(spans)
     joined = spans.repartition(P, "doc_id").join(
         sidecar.repartition(P, "doc_id"), ["doc_id", "offset"]
     )
-    return extract_spans_flat(
+    return _plan(
         joined,
         cfg,
-        mega_threshold=mega_threshold,
-        mega_ids=mega_ids,
-        pre_partitioned=subset_ok,
-        mega_ids_df=mega_ids_df,
+        mega_threshold,
+        dual,
+        counted=sidecars[0],
+        clustered=doc_clustering_safe(documents.sparkSession),
     )
 
 
@@ -613,44 +563,6 @@ def extract_spans_preset(
         )
     return extract_spans(
         documents, sidecars, cfg=preset.config, mega_threshold=mega_threshold
-    )
-
-
-def extract_spans_dual(
-    documents: DataFrame,
-    layout_blocks: DataFrame,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    mega_threshold: int = MEGA_THRESHOLD,
-) -> DataFrame:
-    """Dual-source (E2, pdf2txt.py) extraction: the sidecar additionally
-    carries the per-row OCR output and the text-layer rect in PDF
-    coords (DUAL_EXTRA_COLS); the kernel arbitrates OCR vs native text
-    per block (levenshtein < 0.2 prefers native) after the C7
-    flip+descale.  Same join/partitioning shape as extract_spans."""
-    spark = documents.sparkSession
-    subset_ok = (
-        spark.conf.get(
-            "spark.sql.requireAllClusterKeysForCoPartition", "true"
-        ).lower()
-        == "false"
-    ) and not (
-        spark.conf.get("spark.sql.adaptive.enabled", "true").lower() == "true"
-        and spark.conf.get(
-            "spark.sql.adaptive.skewJoin.enabled", "false"
-        ).lower()
-        == "true"
-    )
-    spans = explode_documents(documents)
-    P = _kernel_partitions(spans)
-    joined = spans.repartition(P, "doc_id").join(
-        layout_blocks.repartition(P, "doc_id"), ["doc_id", "offset"]
-    )
-    return extract_spans_flat(
-        joined,
-        cfg,
-        mega_threshold=mega_threshold,
-        pre_partitioned=subset_ok,
-        dual=True,
     )
 
 

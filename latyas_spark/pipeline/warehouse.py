@@ -9,6 +9,11 @@ count, and every subsequent equi-join on that key is exchange-free
 (Spark's bucketed scan satisfies the join's required distribution, so
 Catalyst plans a SortMergeJoin with NO Exchange on either side).
 
+Extraction over these tables (extract_from_warehouse) is a feed, not a
+second planner: it builds the co-located join and hands it to
+extract.py's one plan, which routes mega docs and runs the kernels
+exactly as for the direct feed.
+
 This is the Spark-native analog of the Iceberg ``bucket(N, doc_id)``
 partition transform the design doc targets (SURVEY.md §4.3); as with
 checkpoint.py, no Iceberg runtime ships in this sandbox, so the
@@ -29,6 +34,14 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..core.document import DEFAULT_CONFIG, ExtractConfig
+from .extract import (
+    MEGA_THRESHOLD,
+    _plan,
+    doc_clustering_safe,
+    explode_documents,
+)
 
 
 def write_bucketed(
@@ -92,8 +105,6 @@ def ingest_corpus(
     the SAME bucket count.  Every subsequent extraction run
     (extract_from_warehouse) then joins and feeds the kernel with zero
     input shuffle.  Returns (spans_table, blocks_table)."""
-    from .extract import explode_documents
-
     docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
     blocks = spark.read.parquet(f"{corpus_dir}/layout_blocks.parquet")
     spans_t, blocks_t = f"{prefix}_spans", f"{prefix}_blocks"
@@ -112,54 +123,25 @@ def extract_from_warehouse(
     spark: SparkSession,
     spans_table: str,
     blocks_table: str,
-    cfg=None,
-    mega_threshold: Optional[int] = None,
+    cfg: ExtractConfig = DEFAULT_CONFIG,
+    mega_threshold: int = MEGA_THRESHOLD,
 ) -> DataFrame:
     """Flagship extraction fed from the bucketed warehouse: ZERO input
     exchange.  Both bucketed scans report HashPartitioning(doc_id), so
     the (doc_id, offset) equi-join co-locates without shuffling, the
-    mega-count aggregation combines in place, and the join output is
-    already doc-clustered for the kernel.  The only exchanges left in
-    the whole job are output-sized (the mega-doc page path + its
-    page-base window).  This is SURVEY §4.3's target plan — the
-    Spark-bucketed-table analog of Iceberg ``bucket(N, doc_id)``; at
-    10^12 docs it removes ~2x-corpus shuffle bytes per run (measured
-    at 960k docs: ~1.26 GB -> ~0.09 GB, BENCH/SCALING_PROFILE.md).
-
-    Falls back to an explicit kernel repartition when the session's
-    settings make subset-key co-partitioning unsafe
-    (extract.doc_clustering_safe)."""
-    from ..core.document import DEFAULT_CONFIG
-    from .extract import (
-        MAX_MEGA_INLIST,
-        MEGA_THRESHOLD,
-        doc_clustering_safe,
-        extract_spans_flat,
-    )
-    from pyspark.sql import functions as F
-
-    if cfg is None:
-        cfg = DEFAULT_CONFIG
-    if mega_threshold is None:
-        mega_threshold = MEGA_THRESHOLD
-    spans = spark.table(spans_table)
-    sidecar = spark.table(blocks_table)
-    mega_ids = None
-    mega_ids_df = None
-    if mega_threshold > 0:
-        counts = sidecar.groupBy("doc_id").count()
-        big = counts.filter(F.col("count") >= mega_threshold).select("doc_id")
-        sample = big.limit(MAX_MEGA_INLIST + 1).collect()
-        if len(sample) > MAX_MEGA_INLIST:
-            mega_ids_df = big
-        else:
-            mega_ids = [r["doc_id"] for r in sample]
-    joined = spans.join(sidecar, ["doc_id", "offset"])
-    return extract_spans_flat(
-        joined,
+    router's mega count over the bucketed sidecar combines in place,
+    and the join output is already doc-clustered for the kernel.  The
+    only exchanges left in the whole job are output-sized (the mega-doc
+    page path + its page-base window).  This is SURVEY §4.3's target
+    plan; at 10^12 docs it removes ~2x-corpus shuffle bytes per run
+    (measured at 960k docs: ~1.26 GB -> ~0.09 GB,
+    BENCH/SCALING_PROFILE.md).  Falls back to an explicit kernel
+    repartition when the session's settings make subset-key
+    co-partitioning unsafe (extract.doc_clustering_safe)."""
+    return _plan(
+        colocated_join(spark, spans_table, blocks_table, ("doc_id", "offset")),
         cfg,
-        mega_threshold=mega_threshold,
-        mega_ids=mega_ids,
-        pre_partitioned=doc_clustering_safe(spark),
-        mega_ids_df=mega_ids_df,
+        mega_threshold,
+        counted=spark.table(blocks_table),
+        clustered=doc_clustering_safe(spark),
     )

@@ -827,7 +827,7 @@ def q_dual_arbitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset order), then the levenshtein pick — OCR output is a
     deterministic corruption of the native text so both branches fire.
     The full pipeline stage (merge + xy-cut + emission) is the
-    extract_spans_dual kernel, golden-tested; this query is the
+    extract_spans(..., dual=True) kernel, golden-tested; this query is the
     SQL-oracle-checkable slice of it."""
     b = synth_blocks(spark, sf_dir).withColumn("kind", _classify_col())
     rs, H = 2.0, 550.0

@@ -2,6 +2,12 @@ import os
 
 import pytest
 
+# build_session defaults spark.driver.memory to 32g, sized for a 32-core
+# bench host.  On a host with less memory the lazily-collected heap of the
+# one long-lived test JVM grows until the OOM killer ends it mid-suite;
+# the test corpora need a small fraction of 4g.  An explicit setting wins.
+os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session")
 def spark():

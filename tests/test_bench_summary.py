@@ -68,3 +68,44 @@ def test_summary_line_degrades_rather_than_overflows():
     assert parsed["n_queries"] == 400
     assert parsed["value"] == 1.0
     assert "scaling_efficiency" in parsed
+
+
+def _report(tmp_path, monkeypatch, scaling):
+    """Run bench._write_report in ``tmp_path``; return the history log's
+    text, or None when nothing was appended."""
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(bench, "SKIP_SCALING", False)
+    bench._write_report(
+        {"scaling": scaling, "queries": {"q": 1.0}, "value": 1.0, "unit": "sec"}
+    )
+    hist = tmp_path / "BENCH" / "HISTORY.md"
+    return hist.read_text() if hist.exists() else None
+
+
+def test_stub_scaling_dict_appends_no_history_row(tmp_path, monkeypatch):
+    # A scaling dict that no campaign produced — the stub above, or one
+    # with rounds that carry an efficiency but no measured throughput —
+    # must leave the append-only log untouched.
+    assert _report(tmp_path, monkeypatch, _scaling_stub()) is None
+    unmeasured = dict(
+        _scaling_stub(),
+        rounds=[{"round": r, "efficiency": 1.0, "valid": True,
+                 "wall_local4": None, "wall_local16": None}
+                for r in range(3)],
+    )
+    assert _report(tmp_path, monkeypatch, unmeasured) is None
+
+
+def test_completed_campaign_appends_one_history_row(tmp_path, monkeypatch):
+    rounds = [
+        {"round": 0, "thr_local4": 5000.0, "thr_local16": 17000.0,
+         "wall_local4": 96.0, "wall_local16": 28.2, "efficiency": 0.85,
+         "valid": True},
+    ]
+    text = _report(
+        tmp_path, monkeypatch,
+        dict(_scaling_stub(), rounds=rounds, n_valid_rounds=1),
+    )
+    rows = [ln for ln in text.splitlines() if ln.startswith("- ")]
+    assert len(rows) == 1
+    assert "N->4N median eff 0.869 over 1 valid rounds" in rows[0]

@@ -65,7 +65,7 @@ def test_levenshtein_cross_check():
 def test_dual_golden_spark_vs_oracle(spark, corpus_dir):
     docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
     blocks = spark.read.parquet(f"{corpus_dir}/layout_blocks.parquet")
-    got = _spark_by_doc(EX.extract_spans_dual(docs, blocks))
+    got = _spark_by_doc(EX.extract_spans(docs, blocks, dual=True))
 
     want = {}
     for doc_id, rows in _rows_by_doc().items():
@@ -294,3 +294,26 @@ def test_mega_inlist_guard_semi_join_path(spark, corpus_dir, monkeypatch):
         "LeftSemi" in plan or "LeftAnti" in plan
     ), plan
     assert collect(guarded_df) == base
+
+
+def test_dual_counts_mega_ids_on_the_primary_sidecar(
+    spark, corpus_dir, monkeypatch
+):
+    """extract_spans(dual=True) routes like the flagship: the router
+    counts the primary sidecar, so its input plans no join and the
+    mega-id collect never re-runs the explode, both shuffles and the
+    join."""
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    blocks = spark.read.parquet(f"{corpus_dir}/layout_blocks.parquet")
+    counted = []
+    route = EX._route_mega
+
+    def spy(frame, mega_threshold):
+        counted.append(frame)
+        return route(frame, mega_threshold)
+
+    monkeypatch.setattr(EX, "_route_mega", spy)
+    EX.extract_spans(docs, blocks, dual=True)
+    assert len(counted) == 1
+    plan = counted[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan

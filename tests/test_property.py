@@ -153,12 +153,6 @@ def _by_key(rows, key):
     return {k: sorted(v, key=lambda r: r["offset"]) for k, v in out.items()}
 
 
-def _driver(page_fn, page_local):
-    if page_local:
-        return EX._page_mode_kernel(DEFAULT_CONFIG, page_fn)
-    return EX._doc_mode_kernel(DEFAULT_CONFIG, page_fn)
-
-
 @pytest.mark.parametrize("page_local", [False, True], ids=["doc", "page"])
 @pytest.mark.parametrize("dual", [False, True], ids=["e1", "dual"])
 @settings(max_examples=60, deadline=None)
@@ -170,7 +164,8 @@ def test_kernel_driver_equals_oracle_on_shuffled_chunks(dual, page_local, chunk)
     (page, page_pos) in page-local mode."""
     rows, batches = chunk
     page_fn = EX._page_dual if dual else EX._page_e1
-    frames = list(_driver(page_fn, page_local)(iter(batches)))
+    run = EX._doc_mode_kernel(DEFAULT_CONFIG, page_fn, page_local=page_local)
+    frames = list(run(iter(batches)))
     out = pd.concat(frames, ignore_index=True) if frames else None
     if page_local:
         oracle = extract_page_dual_oracle if dual else extract_page_oracle
