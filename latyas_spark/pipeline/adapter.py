@@ -5,79 +5,277 @@ The driver smoke/correctness harness provides TPC-H-ish parquet only;
 the extraction engine needs (bbox, conf, label, text, media) rows.  We
 derive them from the ``events`` table with arithmetic that DuckDB can
 reproduce verbatim, so sub-operator queries over this corpus can be
-oracle-checked SQL-to-SQL (see relational/queries.py).
+oracle-checked SQL-to-SQL (see relational/registry.py).
 
-Every expression below is mirrored in ``SYNTH_BLOCKS_SQL``; keep the
-two in sync.
+Each synthetic-geometry family is written once, as a ``Family`` spec in
+``FAMILIES``: a doc-id prefix, a label list, and dialect-neutral SQL
+expressions for ``x1``, ``w``, ``y1`` and ``h``.  One template
+(``_FAMILY_SQL``) renders a spec, and both engines run the rendered
+text: Spark over the events frame (``synth_blocks``), DuckDB over its
+``events`` view (``synth_sql``).  The renderings differ only in how the
+``offset`` column is quoted.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # raw detector labels, deliberately including from_str quirk forms
-ADAPTER_LABELS = [
+ADAPTER_LABELS = (
     "text", "Text", "title", "figure", "figure_caption", "table",
     "header", "footer", "reference", "equation", "embedeq", "TOC",
     "list", "icon", "qrcode", "textwithequation", "blob", "caption",
-]
+)
 
 # labels whose kind is a media kind (from_str: figure/icon/qrcode)
 MEDIA_LABELS = ("figure", "icon", "qrcode")
 
+# Labels for the cut-free corpora: ADAPTER_LABELS minus embedeq (no
+# containment/texmix on these pages by construction).
+SIMPLE_LABELS = tuple(s for s in ADAPTER_LABELS if s != "embedeq")
 
-def synth_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet -> flat kernel-input frame (KERNEL_COLS shape)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in ADAPTER_LABELS])
-    df = ev.select(
-        F.concat(
-            F.lit("evdoc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id").alias("event_id"),
-        ((F.col("event_id") * 131) % 700).cast("double").alias("x1"),
-        ((F.col("event_id") * 197) % 900).cast("double").alias("y1"),
-        (40 + (F.col("event_id") * 17) % 260).cast("double").alias("w"),
-        (20 + (F.col("event_id") * 23) % 80).cast("double").alias("h"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(labels_arr, ((F.col("event_id") * 13) % 18 + 1).cast("int")).alias(
-            "label"
+
+@dataclass(frozen=True)
+class Family:
+    """One synthetic page family.
+
+    ``x1``, ``w``, ``y1`` and ``h`` are SQL expressions over
+    ``event_id`` and, when ``rank_by`` is set, ``rn``: the 0-based
+    ``row_number() OVER (PARTITION BY rank_by ORDER BY event_id)``.
+    Only the stacked families rank, because the window costs the plan
+    an exchange.  Write ``CAST(... AS DOUBLE)`` rather than decimal
+    literals: Spark parses ``100.0`` as a decimal.
+    """
+
+    prefix: str
+    labels: tuple[str, ...]
+    x1: str
+    w: str
+    y1: str
+    h: str
+    rank_by: str | None = None
+
+
+_H = "20 + (event_id * 23) % 80"
+_STACK_W = "100 + (event_id * 11) % 60"
+
+FAMILIES: dict[str, Family] = {
+    # The general corpus: boxes scattered over a 700x900 page with every
+    # label, so overlaps, containment and real xy-cut recursion all
+    # occur.  Rows-only or sub-operator oracles only.
+    "blocks": Family(
+        "evdoc", ADAPTER_LABELS,
+        x1="(event_id * 131) % 700", w="40 + (event_id * 17) % 260",
+        y1="(event_id * 197) % 900", h=_H,
+    ),
+    # Cut-free single column: the xy-cut recursion provably reduces to
+    # an ascending-y sort, making the WHOLE extraction DAG expressible
+    # in SQL (registry flagship_simple):
+    #   * every pair of blocks overlaps in x (x1 in [100,150], width
+    #     >= 300): a real vertical split would need two x-disjoint
+    #     blocks, so no depth-0 cut fires;
+    #   * blocks are y-stacked at pitch 125 with heights <= 99, so every
+    #     consecutive y-gap is >= 26 > 2*margin(10): each depth-1
+    #     horizontal cut isolates one block -> reading order == y order;
+    #   * no embedeq labels (no containment stage), no overlapping pairs
+    #     (zero intersection areas -> no merge).
+    # Low-confidence rows still land in the text layer, so the gather
+    # stage stays live.
+    "simple": Family(
+        "simdoc", SIMPLE_LABELS,
+        x1="100 + (event_id * 7) % 50", w="300 + (event_id * 11) % 100",
+        y1="rn * 125", h=_H, rank_by="doc_id, page",
+    ),
+    # Two columns: exactly ONE provable depth-0 vertical cut, then
+    # cut-free columns.  simple is cut-free, so its hash never exercises
+    # cut SELECTION; this family pins the recursion's first branch:
+    #   * blocks alternate between two x-disjoint columns
+    #     (col = event_id % 2): left x in [100, 308), right in
+    #     [400, 608) — the >= 92px column gap dwarfs 2*margin(10), and
+    #     within a column every pair x-overlaps (x1 spread 50 < min
+    #     width 100), so the depth-0 horizontal-axis sweep admits
+    #     EXACTLY one valid cut, at max(left x2) + 10: any cut inside a
+    #     column has a straddler (all lo <= 150/450 < any hi+10
+    #     candidate), and later in-gap candidates are skipped as
+    #     near-side-empty increments (xycut.py:214-221);
+    #   * per page the blocks are y-stacked at pitch 125 with heights
+    #     <= 99 (gap >= 26 > 2*margin), so each column's depth-1
+    #     VERTICAL sweep isolates every block -> within-column order is
+    #     ascending y;
+    #   * reading order is therefore (column, y1) — SQL-expressible —
+    #     with the left segment emitted first (children pushed in
+    #     reverse, xycut.py:232-233);
+    #   * single-column pages degenerate to the cut-free case whose
+    #     order (ascending y) equals the same (column, y1) key;
+    #   * no embedeq labels, zero pair intersections (columns are
+    #     x-disjoint, same-page rows y-disjoint), so merge/containment
+    #     no-op and the gather provably returns each row's own text —
+    #     exactly simple's arguments.
+    "depth1": Family(
+        "d1doc", SIMPLE_LABELS,
+        x1="100 + (event_id % 2) * 300 + (event_id * 7) % 50", w=_STACK_W,
+        y1="rn * 125", h=_H, rank_by="doc_id, page",
+    ),
+    # Three columns: exactly TWO provable depth-0 vertical cuts (a
+    # MULTI-segment split), then cut-free columns.  depth1 pins
+    # single-cut selection; this family pins the nseg>2 path — candidate
+    # dedup across a gap (the far-side candidate of an already-consumed
+    # gap is skipped as near-side-empty, xycut.py:214-221), bisect
+    # segment assignment over MULTIPLE cuts, and the reversed push of 3
+    # children (xycut.py:232-233):
+    #   * col = event_id % 3 at x bases 100/400/700 with x1 spread < 50
+    #     and widths in [100,160): columns occupy [100,310), [400,610),
+    #     [700,910) — both inter-column gaps are >= 90 >> margin 10, and
+    #     within a column all pairs x-overlap, so the depth-0 sweep
+    #     admits exactly one valid cut per gap -> 3 segments in
+    #     left-to-right order;
+    #   * per page blocks are y-stacked at pitch 125 with heights <= 99
+    #     (same argument as depth1), so each column's depth-1 vertical
+    #     sweep isolates every block;
+    #   * reading order is therefore (column, y1), columns left first —
+    #     SQL-expressible;
+    #   * no embedeq labels, zero pair intersections -> merge,
+    #     containment and texmix all no-op, gather returns each row's
+    #     own text.
+    "threecol": Family(
+        "c3doc", SIMPLE_LABELS,
+        x1="100 + (event_id % 3) * 300 + (event_id * 7) % 50", w=_STACK_W,
+        y1="rn * 125", h=_H, rank_by="doc_id, page",
+    ),
+    # Margin DECAY: a depth-3 cut that fires only because the xy-cut
+    # margin decays with depth (child_m = m - depth*(m/max_depth),
+    # xycut.py; reference xy_cut_reflow.py margin schedule).
+    # Margins by depth: m0=m1=10, m2=8.75, m3=6.5625.  Per page, two
+    # columns (bases 100/400, ranked per column); within a column,
+    # super-bands of pitch 300 (rn // 3) holding a full-strip block F
+    # (rn % 3 = 0) at y=300r (x [base, base+260]) and a pair at
+    # y=300r+150: B upper-RIGHT (rn % 3 = 1: [base+160, base+260],
+    # y [t, t+40]) and C lower-LEFT (rn % 3 = 2: [base+100, base+200],
+    # y [t+48, t+88]):
+    #   * depth 0 (x, m=10): only the inter-column gap (40 >= 10) cuts —
+    #     every in-column candidate is either near-side-empty (nothing
+    #     ends left of C.lo-10) or straddled by an F;
+    #   * depth 1 (y, m=10): band extents are y-disjoint by >= 51, so
+    #     cuts isolate each band; INSIDE the pair band the 8px B/C gap
+    #     is < 10, so the pair stays whole;
+    #   * depth 2 (x, m=8.75): B and C x-overlap ([base+160, base+200])
+    #     -> no cut, the pair descends;
+    #   * depth 3 (y, m=6.5625): the SAME 8px gap now satisfies
+    #     8 >= 6.5625 -> cut fires -> B (upper) before C (lower);
+    #   * a constant-margin mutant would never cut the pair and falls to
+    #     the depth>8 grid sort, whose key is x-major
+    #     (xycut._grid_sort_list) -> C (left) before B — so the hash
+    #     OBSERVABLY pins the decay schedule, not just cut selection;
+    #   * reading order is therefore exactly (column, y1) — B.y1 < C.y1 —
+    #     and stays (column, y1) under any conf-filter subset (removing
+    #     F creates no in-column depth-0 cut: the region left of C has
+    #     no box ends; removing B or C leaves singletons);
+    #   * zero pair intersections (F y-disjoint from B/C; B,C y-disjoint;
+    #     columns x-disjoint), no embedeq -> merge/containment/texmix
+    #     no-op, gather returns each row's own text.
+    "decay": Family(
+        "dcdoc", SIMPLE_LABELS,
+        x1="100 + (event_id % 2) * 300"
+        " + CASE rn % 3 WHEN 1 THEN 160 WHEN 2 THEN 100 ELSE 0 END",
+        w="CASE rn % 3 WHEN 0 THEN 260 ELSE 100 END",
+        y1="floor(rn / 3) * 300"
+        " + CASE rn % 3 WHEN 1 THEN 150 WHEN 2 THEN 198 ELSE 0 END",
+        h=f"CASE rn % 3 WHEN 0 THEN {_H} ELSE 40 END",
+        rank_by="doc_id, page, event_id % 2",
+    ),
+    # Conflict-free mixed text+equation family: one box per 80px line
+    # band per (doc_id, page), y1 = band * 80 exactly, so the mix
+    # kernel's band snap is the identity and every box sits alone on
+    # its row.  On this family every data-dependent branch of the
+    # interleave provably no-ops:
+    #   * ``merge_same_row`` sees no same-row pair -> identity;
+    #   * ``split_conflict`` sees no text/latex row conflict -> no
+    #     truncate/split/re-enqueue;
+    #   * the re-recognition gather returns each text box's own content
+    #     (no other box shares its row);
+    #   * the ``\tag`` splice needs an isolated formula and a text box
+    #     on ONE row -> never fires;
+    #   * contents carry no ``$``/backslash/brace, so to_katex and
+    #     normalize_inline reduce to space-collapse + trim.
+    # What remains — classify, conf filter, kind routing, $/$$ wrapping,
+    # row-major assembly, final strip — is ANSI-SQL, so the REAL kernel
+    # (registry mix_simple runs compose_mixed_page unchanged) is
+    # hash-checked end-to-end on this slice; the general corpus stays
+    # rows-only (mix_interleave, pinned by tests/test_mixkernel.py).
+    "mix": Family(
+        "mixdoc", ADAPTER_LABELS,
+        x1="(event_id * 131) % 700", w="40 + (event_id * 17) % 260",
+        y1="rn * 80", h="64", rank_by="doc_id, page",
+    ),
+}
+
+# ``{offset}`` is the quoted offset column and ``{events}`` the events
+# relation: Spark binds a DataFrame to ``{events}`` through spark.sql's
+# keyword arguments, so the rendered text must hold no other braces.
+_FAMILY_SQL = """
+WITH base AS (
+  SELECT
+    '{prefix}-' || lpad(CAST(user_id % 200 AS STRING), 5, '0') AS doc_id,
+    CAST(event_id % 3 AS INT) AS page,
+    event_id, event_type
+  FROM {events}
+), ranked AS (
+  SELECT *{rank}
+  FROM base
+), placed AS (
+  SELECT doc_id, page, event_id, event_type,
+    CAST({x1} AS DOUBLE) AS x1,
+    CAST({w} AS DOUBLE) AS w,
+    CAST({y1} AS DOUBLE) AS y1,
+    CAST({h} AS DOUBLE) AS h,
+    CAST((event_id * 7) % 100 AS DOUBLE) / 100 AS conf,
+    CASE (event_id * 13) % {n_labels}
+      {label_whens}
+    END AS label
+  FROM ranked
+)
+SELECT
+  doc_id, page,
+  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
+    AS {offset},
+  x1, y1, x1 + w AS x2, y1 + h AS y2, conf, label,
+  CASE WHEN label IN {media} THEN NULL
+       ELSE event_type || ' ' || CAST(event_id AS STRING) END AS text,
+  CASE WHEN label IN {media}
+       THEN 'media://' || CAST(event_id AS STRING) END AS media_ref
+FROM placed
+"""
+
+
+def _render(family: str, offset: str, events: str) -> str:
+    fam = FAMILIES[family]
+    rank = (
+        f",\n    row_number() OVER (PARTITION BY {fam.rank_by}"
+        " ORDER BY event_id) - 1 AS rn"
+        if fam.rank_by
+        else ""
+    )
+    return _FAMILY_SQL.format(
+        prefix=fam.prefix,
+        events=events,
+        rank=rank,
+        x1=fam.x1, w=fam.w, y1=fam.y1, h=fam.h,
+        n_labels=len(fam.labels),
+        label_whens="\n      ".join(
+            f"WHEN {i} THEN '{s}'" for i, s in enumerate(fam.labels)
         ),
-        F.col("event_type"),
+        offset=offset,
+        media="(" + ", ".join(f"'{s}'" for s in MEDIA_LABELS) + ")",
     )
-    df = df.select(
-        "doc_id",
-        "page",
-        "event_id",
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + F.col("h")).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
-    from pyspark.sql import Window
 
-    w = Window.partitionBy("doc_id").orderBy("event_id")
-    return df.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(w) - 1).cast("int").alias("offset"),
-        "x1", "y1", "x2", "y2", "conf", "label", "text", "media_ref",
-    )
+
+def synth_sql(family: str) -> str:
+    """DuckDB text of a family over the ``events`` view: the same rows,
+    column names and order as ``synth_blocks(..., family)``."""
+    return _render(family, '"offset"', "events")
 
 
 def _with_dual_columns(b: DataFrame) -> DataFrame:
@@ -85,7 +283,25 @@ def _with_dual_columns(b: DataFrame) -> DataFrame:
     a deterministic OCR corruption (offset%4: reversed, else a<->e
     swapped — both arbitration branches fire) and the text-layer rect
     as the exact C7 image of the bbox (rs=2, H=550; matches
-    q_dual_arbitrate).  Shared by every synth_blocks_dual_* family."""
+    q_dual_arbitrate).
+
+    On the stacked families the dual oracles stay SQL-expressible
+    because every degeneracy argument in FAMILIES is SUBSET-STABLE:
+    each is an all-pairs property of the full family (same-page blocks
+    y-disjoint, columns x-disjoint, within-column all-pairs x-overlap;
+    for decay, removing F creates no in-column depth-0 cut and removing
+    B or C leaves singletons), so it survives the dual DAG's conf > 0.3
+    + arbitration-kind + CJK filters.  Hence the overlap merge stays
+    the identity, each detection's flipped bbox intersects exactly its
+    OWN layer rect (the gather returns the row's own text), and the
+    reading order stays (page, column, y1) for any surviving subset —
+    a page left with one inhabited column takes the cut-free order,
+    which the same key gives.  Arbitration and the CJK filters are
+    directly SQL-expressible (registry ``_dual_sql``), so the dual
+    pipeline (pdf2txt.py:52-100) is hash-checked end to end per family,
+    including the margin-decay schedule: losing the decay would flip
+    B/C emission order doc-wide.
+    """
     rs, H = 2.0, 550.0
     return b.select(
         "*",
@@ -100,682 +316,17 @@ def _with_dual_columns(b: DataFrame) -> DataFrame:
     )
 
 
-def synth_blocks_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """synth_blocks + the dual-source (E2) columns (_with_dual_columns)."""
-    return _with_dual_columns(synth_blocks(spark, sf_dir))
-
-
-# Labels for the cut-free corpus: ADAPTER_LABELS minus embedeq (no
-# containment/texmix on these pages by construction).
-SIMPLE_LABELS = [s for s in ADAPTER_LABELS if s != "embedeq"]
-
-
-def synth_blocks_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cut-free single-column page family (KERNEL_COLS shape).
-
-    Geometry is constructed so the xy-cut recursion provably reduces to
-    an ascending-y sort, making the WHOLE extraction DAG expressible in
-    SQL (registry.q_flagship_simple's oracle):
-
-      * every pair of blocks overlaps in x (x1 in [100,150], width
-        >= 300): a real vertical split would need two x-disjoint
-        blocks, so no depth-0 cut fires;
-      * blocks are y-stacked at pitch 125 with heights <= 99, so every
-        consecutive y-gap is >= 26 > 2*margin(10): each depth-1
-        horizontal cut isolates one block -> reading order == y order;
-      * no embedeq labels (no containment stage), no overlapping pairs
-        (zero intersection areas -> no merge).
-
-    Low-confidence rows still land in the text layer, so the gather
-    stage stays live.  Mirrored in SYNTH_SIMPLE_SQL.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in SIMPLE_LABELS])
-    base = ev.select(
-        F.concat(
-            F.lit("simdoc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id"),
-        (100 + (F.col("event_id") * 7) % 50).cast("double").alias("x1"),
-        (300 + (F.col("event_id") * 11) % 100).cast("double").alias("w"),
-        (20 + (F.col("event_id") * 23) % 80).cast("double").alias("h"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(
-            labels_arr, ((F.col("event_id") * 13) % 17 + 1).cast("int")
-        ).alias("label"),
-        F.col("event_type"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id", "page").orderBy("event_id")
-    stacked = base.select(
-        "doc_id", "page", "event_id", "x1", "w", "h", "conf", "label",
-        "event_type",
-        ((F.row_number().over(w) - 1) * 125).cast("double").alias("y1"),
-    )
-    wd = Window.partitionBy("doc_id").orderBy("event_id")
-    return stacked.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(wd) - 1).cast("int").alias("offset"),
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + F.col("h")).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
-
-
-def synth_blocks_depth1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-column page family: exactly ONE provable depth-0 vertical
-    cut, then cut-free columns (KERNEL_COLS shape).
-
-    VERDICT r2 #5: flagship_simple's family is cut-free (the xy-cut
-    recursion no-ops), so the cross-engine hash never exercised cut
-    SELECTION.  This family pins the recursion's first branch:
-
-      * blocks alternate between two x-disjoint columns
-        (col = event_id % 2): left x in [100, 308), right in
-        [400, 608) — the >= 92px column gap dwarfs 2*margin(10), and
-        within a column every pair x-overlaps (x1 spread 50 < min
-        width 100), so the depth-0 horizontal-axis sweep admits
-        EXACTLY one valid cut, at max(left x2) + 10: any cut inside a
-        column has a straddler (all lo <= 150/450 < any hi+10
-        candidate), and later in-gap candidates are skipped as
-        near-side-empty increments (xycut.py:214-221);
-      * per page the blocks are y-stacked at pitch 125 with heights
-        <= 99 (gap >= 26 > 2*margin), so each column's depth-1
-        VERTICAL sweep isolates every block -> within-column order is
-        ascending y;
-      * reading order is therefore (column, y1) — SQL-expressible —
-        with the left segment emitted first (children pushed in
-        reverse, xycut.py:232-233);
-      * single-column pages degenerate to the cut-free case whose
-        order (ascending y) equals the same (column, y1) key;
-      * no embedeq labels, zero pair intersections (columns are
-        x-disjoint, same-page rows y-disjoint), so merge/containment
-        no-op and the gather provably returns each row's own text —
-        exactly flagship_simple's arguments.
-
-    Mirrored in SYNTH_DEPTH1_SQL."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in SIMPLE_LABELS])
-    base = ev.select(
-        F.concat(
-            F.lit("d1doc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id"),
-        (
-            100 + (F.col("event_id") % 2) * 300 + (F.col("event_id") * 7) % 50
-        ).cast("double").alias("x1"),
-        (100 + (F.col("event_id") * 11) % 60).cast("double").alias("w"),
-        (20 + (F.col("event_id") * 23) % 80).cast("double").alias("h"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(
-            labels_arr, ((F.col("event_id") * 13) % 17 + 1).cast("int")
-        ).alias("label"),
-        F.col("event_type"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id", "page").orderBy("event_id")
-    stacked = base.select(
-        "doc_id", "page", "event_id", "x1", "w", "h", "conf", "label",
-        "event_type",
-        ((F.row_number().over(w) - 1) * 125).cast("double").alias("y1"),
-    )
-    wd = Window.partitionBy("doc_id").orderBy("event_id")
-    return stacked.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(wd) - 1).cast("int").alias("offset"),
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + F.col("h")).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
-
-
-SYNTH_DEPTH1_SQL = """
-WITH base AS (
-  SELECT
-    'd1doc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
-    CAST(event_id % 3 AS INT) AS page,
-    event_id,
-    CAST(100 + (event_id % 2) * 300 + (event_id * 7) % 50 AS DOUBLE) AS x1,
-    CAST(100 + (event_id * 11) % 60 AS DOUBLE) AS w,
-    CAST(20 + (event_id * 23) % 80 AS DOUBLE) AS h,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 17 + 1 AS INT)] AS label,
-    event_type
-  FROM events
-), stacked AS (
-  SELECT *,
-    CAST((row_number() OVER (PARTITION BY doc_id, page ORDER BY event_id)
-          - 1) * 125 AS DOUBLE) AS y1
-  FROM base
-)
-SELECT
-  doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
-  x1, y1, x1 + w AS x2, y1 + h AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
-FROM stacked
-"""
-
-
-def synth_blocks_threecol(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three-column page family: exactly TWO provable depth-0 vertical
-    cuts (a MULTI-segment split), then cut-free columns.
-
-    flagship_depth1 pins single-cut selection; this family pins the
-    nseg>2 path — candidate dedup across a gap (the far-side candidate
-    of an already-consumed gap is skipped as near-side-empty,
-    xycut.py:214-221), bisect segment assignment over MULTIPLE cuts,
-    and the reversed push of 3 children (xycut.py:232-233):
-
-      * col = event_id % 3 at x bases 100/400/700 with x1 spread < 50
-        and widths in [100,160): columns occupy [100,310), [400,610),
-        [700,910) — both inter-column gaps are >= 90 >> margin 10, and
-        within a column all pairs x-overlap, so the depth-0 sweep
-        admits exactly one valid cut per gap -> 3 segments in
-        left-to-right order;
-      * per page blocks are y-stacked at pitch 125 with heights <= 99
-        (same argument as synth_blocks_depth1), so each column's
-        depth-1 vertical sweep isolates every block;
-      * reading order is therefore (column, y1), columns left first —
-        SQL-expressible;
-      * no embedeq labels, zero pair intersections -> merge,
-        containment and texmix all no-op, gather returns each row's
-        own text.
-
-    Mirrored in SYNTH_THREECOL_SQL."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in SIMPLE_LABELS])
-    base = ev.select(
-        F.concat(
-            F.lit("c3doc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id"),
-        (
-            100 + (F.col("event_id") % 3) * 300 + (F.col("event_id") * 7) % 50
-        ).cast("double").alias("x1"),
-        (100 + (F.col("event_id") * 11) % 60).cast("double").alias("w"),
-        (20 + (F.col("event_id") * 23) % 80).cast("double").alias("h"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(
-            labels_arr, ((F.col("event_id") * 13) % 17 + 1).cast("int")
-        ).alias("label"),
-        F.col("event_type"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id", "page").orderBy("event_id")
-    stacked = base.select(
-        "doc_id", "page", "event_id", "x1", "w", "h", "conf", "label",
-        "event_type",
-        ((F.row_number().over(w) - 1) * 125).cast("double").alias("y1"),
-    )
-    wd = Window.partitionBy("doc_id").orderBy("event_id")
-    return stacked.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(wd) - 1).cast("int").alias("offset"),
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + F.col("h")).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
-
-
-SYNTH_THREECOL_SQL = """
-WITH base AS (
-  SELECT
-    'c3doc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
-    CAST(event_id % 3 AS INT) AS page,
-    event_id,
-    CAST(100 + (event_id % 3) * 300 + (event_id * 7) % 50 AS DOUBLE) AS x1,
-    CAST(100 + (event_id * 11) % 60 AS DOUBLE) AS w,
-    CAST(20 + (event_id * 23) % 80 AS DOUBLE) AS h,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 17 + 1 AS INT)] AS label,
-    event_type
-  FROM events
-), stacked AS (
-  SELECT *,
-    CAST((row_number() OVER (PARTITION BY doc_id, page ORDER BY event_id)
-          - 1) * 125 AS DOUBLE) AS y1
-  FROM base
-)
-SELECT
-  doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
-  x1, y1, x1 + w AS x2, y1 + h AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
-FROM stacked
-"""
-
-
-def synth_blocks_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Margin-DECAY family: a depth-3 cut that fires only because the
-    xy-cut margin decays with depth (child_m = m - depth*(m/max_depth),
-    xycut.py; reference xy_cut_reflow.py margin schedule).
-
-    Margins by depth: m0=m1=10, m2=8.75, m3=6.5625.  Per page, two
-    columns (bases 100/400); within a column, super-bands of pitch 300
-    holding a full-strip block F at y=300r (x [base, base+260]) and a
-    pair at y=300r+150: B upper-RIGHT ([base+160, base+260], y [t,
-    t+40]) and C lower-LEFT ([base+100, base+200], y [t+48, t+88]):
-
-      * depth 0 (x, m=10): only the inter-column gap (40 >= 10) cuts —
-        every in-column candidate is either near-side-empty (nothing
-        ends left of C.lo-10) or straddled by an F;
-      * depth 1 (y, m=10): band extents are y-disjoint by >= 51, so
-        cuts isolate each band; INSIDE the pair band the 8px B/C gap
-        is < 10, so the pair stays whole;
-      * depth 2 (x, m=8.75): B and C x-overlap ([base+160, base+200])
-        -> no cut, the pair descends;
-      * depth 3 (y, m=6.5625): the SAME 8px gap now satisfies
-        8 >= 6.5625 -> cut fires -> B (upper) before C (lower);
-      * a constant-margin mutant would never cut the pair and falls to
-        the depth>8 grid sort, whose key is x-major
-        (xycut._grid_sort_list) -> C (left) before B — so the hash
-        OBSERVABLY pins the decay schedule, not just cut selection;
-      * reading order is therefore exactly (column, y1) — B.y1 < C.y1 —
-        and stays (column, y1) under any conf-filter subset (removing
-        F creates no in-column depth-0 cut: the region left of C has
-        no box ends; removing B or C leaves singletons);
-      * zero pair intersections (F y-disjoint from B/C; B,C y-disjoint;
-        columns x-disjoint), no embedeq -> merge/containment/texmix
-        no-op, gather returns each row's own text.
-
-    Mirrored in SYNTH_DECAY_SQL."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in SIMPLE_LABELS])
-    base = ev.select(
-        F.concat(
-            F.lit("dcdoc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id"),
-        (100 + (F.col("event_id") % 2) * 300).cast("double").alias("colbase"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(
-            labels_arr, ((F.col("event_id") * 13) % 17 + 1).cast("int")
-        ).alias("label"),
-        F.col("event_type"),
-    )
-    from pyspark.sql import Window
-
-    wcol = Window.partitionBy("doc_id", "page", "colbase").orderBy("event_id")
-    rn = F.row_number().over(wcol) - 1
-    role = rn % 3  # 0 = F full-strip, 1 = B upper-right, 2 = C lower-left
-    band_y = (F.floor(rn / 3) * 300).cast("double")
-    placed = base.select(
-        "doc_id", "page", "event_id", "conf", "label", "event_type",
-        (
-            F.col("colbase")
-            + F.when(role == 1, F.lit(160.0))
-            .when(role == 2, F.lit(100.0))
-            .otherwise(F.lit(0.0))
-        ).alias("x1"),
-        F.when(role == 0, F.lit(260.0)).otherwise(F.lit(100.0)).alias("w"),
-        (
-            band_y
-            + F.when(role == 1, F.lit(150.0))
-            .when(role == 2, F.lit(198.0))
-            .otherwise(F.lit(0.0))
-        ).alias("y1"),
-        F.when(role == 0, (20 + (F.col("event_id") * 23) % 80).cast("double"))
-        .otherwise(F.lit(40.0))
-        .alias("h"),
-    )
-    wd = Window.partitionBy("doc_id").orderBy("event_id")
-    return placed.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(wd) - 1).cast("int").alias("offset"),
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + F.col("h")).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
-
-
-SYNTH_DECAY_SQL = """
-WITH base AS (
-  SELECT
-    'dcdoc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
-    CAST(event_id % 3 AS INT) AS page,
-    event_id,
-    CAST(100 + (event_id % 2) * 300 AS DOUBLE) AS colbase,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 17 + 1 AS INT)] AS label,
-    event_type
-  FROM events
-), placed AS (
-  SELECT doc_id, page, event_id, conf, label, event_type,
-    colbase + CASE rn % 3 WHEN 1 THEN 160.0 WHEN 2 THEN 100.0
-              ELSE 0.0 END AS x1,
-    CASE rn % 3 WHEN 0 THEN 260.0 ELSE 100.0 END AS w,
-    CAST((rn // 3) * 300 AS DOUBLE)
-      + CASE rn % 3 WHEN 1 THEN 150.0 WHEN 2 THEN 198.0
-        ELSE 0.0 END AS y1,
-    CASE rn % 3 WHEN 0 THEN CAST(20 + (event_id * 23) % 80 AS DOUBLE)
-      ELSE 40.0 END AS h
-  FROM (
-    SELECT *,
-      row_number() OVER (PARTITION BY doc_id, page, colbase
-                         ORDER BY event_id) - 1 AS rn
-    FROM base
-  )
-)
-SELECT
-  doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
-  x1, y1, x1 + w AS x2, y1 + h AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
-FROM placed
-"""
-
-
-def synth_blocks_dual_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cut-free family + the dual-source (E2) columns: the
-    synth_blocks_simple geometry (xy-cut provably degenerates to an
-    ascending-y sort; zero pair intersections, so overlap-merge is the
-    identity) with synth_blocks_dual's deterministic OCR corruption and
-    the text-layer rect as the exact C7 image of the bbox (rs=2,
-    H=550).  Because every page's blocks are y-disjoint, each
-    detection's flipped bbox intersects exactly its own layer rect —
-    the gather stage provably returns the row's own text — so the WHOLE
-    dual pipeline (pdf2txt.py:52-100) is SQL-expressible on this family
-    (registry.DUAL_SIMPLE_SQL)."""
-    return _with_dual_columns(synth_blocks_simple(spark, sf_dir))
-
-
-def synth_blocks_dual_depth1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-column family + the dual-source (E2) columns: the
-    synth_blocks_depth1 geometry (exactly ONE provable depth-0 vertical
-    cut, then cut-free columns) with the _with_dual_columns OCR
-    corruption and C7 layer rects.
-
-    Degeneracy arguments, all SUBSET-STABLE (they survive the dual
-    DAG's conf>0.3 + arb-kind + CJK filters because each is an
-    all-pairs property of the full family):
-
-      * same-page blocks are y-disjoint (pitch 125, heights <= 99), so
-        the overlap merge is the identity and each detection's flipped
-        bbox intersects exactly its OWN layer rect — the gather
-        provably returns the row's own text (same as dual_simple);
-      * the column argument of synth_blocks_depth1 (left x in
-        [100,308), right in [400,608), >= 92px gap, within-column
-        all-pairs x-overlap) holds for EVERY subset of blocks, so the
-        xy-cut admits exactly one depth-0 cut when both columns are
-        inhabited and degenerates to the same (column, y1) order when
-        one is empty;
-      * arbitration and CJK filters are directly SQL-expressible
-        (DUAL_SIMPLE_SQL's picked/emitted stages).
-
-    So the driver hash-checks the dual pipeline's cut SELECTION +
-    recursive descent + arbitration + CJK filters in one query
-    (registry.DUAL_DEPTH1_SQL) — the slice q_dual_simple's cut-free
-    family could not pin."""
-    return _with_dual_columns(synth_blocks_depth1(spark, sf_dir))
-
-
-def synth_blocks_dual_threecol(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three-column family + the dual-source (E2) columns: the
-    synth_blocks_threecol geometry (exactly TWO provable depth-0 cuts
-    — the nseg>2 multi-segment path) with the _with_dual_columns
-    decoration.  All of synth_blocks_dual_depth1's subset-stability
-    arguments apply unchanged (same 125-pitch y-stacking, same
-    all-pairs column structure per gap), so the dual DAG's candidate
-    dedup across gaps, bisect assignment over multiple cuts, and
-    reversed 3-child push are hash-checked via registry.
-    DUAL_THREECOL_SQL — reading order provably (page, column, y1)."""
-    return _with_dual_columns(synth_blocks_threecol(spark, sf_dir))
-
-
-def synth_blocks_dual_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Margin-decay family + the dual-source (E2) columns: the
-    synth_blocks_decay geometry (a depth-3 cut that fires ONLY because
-    the xy-cut margin decays; a constant-margin mutant falls to the
-    x-major grid sort and emits the B/C pair in the OPPOSITE order)
-    with the _with_dual_columns decoration.
-
-    Subset-stability is already proven for this family for ARBITRARY
-    subsets (synth_blocks_decay docstring: "stays (column, y1) under
-    any conf-filter subset" — removing F creates no in-column depth-0
-    cut, removing B or C leaves singletons), which covers the dual
-    DAG's conf + arb-kind + CJK filtering exactly.  Same-column blocks
-    are y-disjoint and cross-column blocks x-disjoint, so the overlap
-    merge stays the identity and each detection's flipped bbox gathers
-    exactly its own layer text.  So the margin-decay SCHEDULE itself
-    is hash-pinned under the dual kernel (registry.DUAL_DECAY_SQL):
-    losing the decay would flip B/C emission order doc-wide."""
-    return _with_dual_columns(synth_blocks_decay(spark, sf_dir))
-
-
-SYNTH_SIMPLE_SQL = """
-WITH base AS (
-  SELECT
-    'simdoc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
-    CAST(event_id % 3 AS INT) AS page,
-    event_id,
-    CAST(100 + (event_id * 7) % 50 AS DOUBLE) AS x1,
-    CAST(300 + (event_id * 11) % 100 AS DOUBLE) AS w,
-    CAST(20 + (event_id * 23) % 80 AS DOUBLE) AS h,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 17 + 1 AS INT)] AS label,
-    event_type
-  FROM events
-), stacked AS (
-  SELECT *,
-    CAST((row_number() OVER (PARTITION BY doc_id, page ORDER BY event_id)
-          - 1) * 125 AS DOUBLE) AS y1
-  FROM base
-)
-SELECT
-  doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
-  x1, y1, x1 + w AS x2, y1 + h AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
-FROM stacked
-"""
-
-
-def synth_blocks_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conflict-free mixed text+equation family (KERNEL_COLS shape).
-
-    One box per 80px line band per (doc_id, page): y1 = band * 80
-    exactly, so the mix kernel's band snap is the identity and every
-    box sits alone on its row.  On this family every data-dependent
-    branch of the interleave provably no-ops:
-
-      * ``merge_same_row`` sees no same-row pair -> identity;
-      * ``split_conflict`` sees no text/latex row conflict -> no
-        truncate/split/re-enqueue;
-      * the re-recognition gather returns each text box's own content
-        (no other box shares its row);
-      * the ``\\tag`` splice needs an isolated formula and a text box
-        on ONE row -> never fires;
-      * contents carry no ``$``/backslash/brace, so to_katex and
-        normalize_inline reduce to space-collapse + trim.
-
-    What remains — classify, conf filter, kind routing, $/$$ wrapping,
-    row-major assembly, final strip — is ANSI-SQL, so the REAL kernel
-    (registry.q_mix_simple runs compose_mixed_page unchanged) is
-    hash-checked end-to-end on this slice; the general corpus stays
-    rows-only (q_mix_interleave, pinned by tests/test_mixkernel.py).
-    Mirrored in SYNTH_MIX_SQL.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in ADAPTER_LABELS])
-    base = ev.select(
-        F.concat(
-            F.lit("mixdoc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id"),
-        ((F.col("event_id") * 131) % 700).cast("double").alias("x1"),
-        (40 + (F.col("event_id") * 17) % 260).cast("double").alias("w"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(labels_arr, ((F.col("event_id") * 13) % 18 + 1).cast("int")).alias(
-            "label"
-        ),
-        F.col("event_type"),
-    )
-    from pyspark.sql import Window
-
-    wp = Window.partitionBy("doc_id", "page").orderBy("event_id")
-    banded = base.select(
-        "doc_id", "page", "event_id", "x1", "w", "conf", "label", "event_type",
-        ((F.row_number().over(wp) - 1) * 80).cast("double").alias("y1"),
-    )
-    wd = Window.partitionBy("doc_id").orderBy("event_id")
-    return banded.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(wd) - 1).cast("int").alias("offset"),
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + 64).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
-
-
-SYNTH_MIX_SQL = """
-WITH mixbase AS (
-  SELECT
-    'mixdoc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
-    CAST(event_id % 3 AS INT) AS page,
-    event_id,
-    CAST((event_id * 131) % 700 AS DOUBLE) AS x1,
-    CAST(40 + (event_id * 17) % 260 AS DOUBLE) AS w,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','embedeq','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 18 + 1 AS INT)] AS label,
-    event_type
-  FROM events
-), mixbanded AS (
-  SELECT *,
-    CAST((row_number() OVER (PARTITION BY doc_id, page ORDER BY event_id)
-          - 1) * 80 AS DOUBLE) AS y1
-  FROM mixbase
-)
-SELECT
-  doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
-  x1, y1, x1 + w AS x2, y1 + 64 AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
-FROM mixbanded
-"""
+def synth_blocks(
+    spark: SparkSession, sf_dir: str, family: str = "blocks", dual: bool = False
+) -> DataFrame:
+    """events.parquet -> flat kernel-input frame (KERNEL_COLS shape) of
+    one ``FAMILIES`` entry; ``dual`` adds the dual-source (E2) columns
+    (``_with_dual_columns``).  The mix family has no dual twin."""
+    if dual and family == "mix":
+        raise ValueError("the mix family has no dual twin")
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    b = spark.sql(_render(family, "`offset`", "{events}"), events=events)
+    return _with_dual_columns(b) if dual else b
 
 
 def synth_blocks_mix_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -965,36 +516,3 @@ concat(
         F.lit(-1).cast("long").alias("token_num"),
     )
     return tokens.unionByName(structs)
-
-
-# DuckDB mirror of synth_blocks (same arithmetic, same column names).
-SYNTH_BLOCKS_SQL = """
-WITH base AS (
-  SELECT
-    'evdoc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
-    CAST(event_id % 3 AS INT) AS page,
-    event_id,
-    CAST((event_id * 131) % 700 AS DOUBLE) AS x1,
-    CAST((event_id * 197) % 900 AS DOUBLE) AS y1,
-    CAST(40 + (event_id * 17) % 260 AS DOUBLE) AS w,
-    CAST(20 + (event_id * 23) % 80 AS DOUBLE) AS h,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','embedeq','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 18 + 1 AS INT)] AS label,
-    event_type
-  FROM events
-)
-SELECT
-  doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
-  x1, y1, x1 + w AS x2, y1 + h AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
-FROM base
-"""

@@ -11,9 +11,11 @@ Cross-engine determinism rules used throughout (floats hash-compared):
 * every computed column is aliased identically on both sides; ranks
   always carry a unique tiebreak column.
 
-The synthetic geometry corpus used by the extraction-analog queries is
-derived from ``events`` with integer arithmetic mirrored exactly in
-SQL (pipeline/adapter.py: synth_blocks <-> SYNTH_BLOCKS_SQL).
+The synthetic geometry corpora used by the extraction-analog queries
+are derived from ``events`` with integer arithmetic; each family is one
+spec in pipeline/adapter.py (``FAMILIES``) that Spark
+(``synth_blocks``) and DuckDB (``synth_sql``) render from the same SQL
+template.
 """
 
 from __future__ import annotations
@@ -25,15 +27,7 @@ from ..core.boilerplate import DEPTH_MOD, LINK_MOD
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..pipeline.adapter import (
-    SYNTH_BLOCKS_SQL,
-    SYNTH_DECAY_SQL,
-    SYNTH_DEPTH1_SQL,
-    SYNTH_MIX_SQL,
-    SYNTH_SIMPLE_SQL,
-    SYNTH_THREECOL_SQL,
-    synth_blocks,
-)
+from ..pipeline.adapter import synth_blocks, synth_sql
 
 # -- helpers ---------------------------------------------------------------
 
@@ -114,7 +108,7 @@ CLASSIFY_SQL_CASE = """
 
 
 def _blocks_cte() -> str:
-    return f"WITH blocks AS (\n{SYNTH_BLOCKS_SQL}\n)"
+    return f"WITH blocks AS (\n{synth_sql('blocks')}\n)"
 
 
 def _pair_explode_expr(
@@ -3857,8 +3851,6 @@ def q_mix_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas kernel over the events-derived corpus.  Rows-only
     check: the heap split/truncate sweep is data-dependent; Spark-vs-
     local equality is pinned by tests/test_mixkernel.py."""
-    from ..pipeline.adapter import synth_blocks
-
     return _mix_markdown(synth_blocks(spark, sf_dir), spark)
 
 
@@ -3868,14 +3860,12 @@ def q_mix_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep, split/truncate, re-recognition gather, to_katex, $/$$
     wrapping, \\tag splice, row-major assembly) runs over a family
     whose geometry provably no-ops every data-dependent branch (one
-    box per 80px line band; see adapter.synth_blocks_mix).  On that
-    slice the composition reduces to classify -> conf filter -> wrap
-    -> ordered string_agg -> trim, which DuckDB hash-checks — so the
-    driver verifies the mixed-OCR DAG end to end while the general
-    corpus stays rows-only."""
-    from ..pipeline.adapter import synth_blocks_mix
-
-    return _mix_markdown(synth_blocks_mix(spark, sf_dir), spark)
+    box per 80px line band; see the mix family in adapter.FAMILIES).
+    On that slice the composition reduces to classify -> conf filter
+    -> wrap -> ordered string_agg -> trim, which DuckDB hash-checks —
+    so the driver verifies the mixed-OCR DAG end to end while the
+    general corpus stays rows-only."""
+    return _mix_markdown(synth_blocks(spark, sf_dir, "mix"), spark)
 
 
 # Text kinds (blocktypes.TEXT_KINDS) in CLASSIFY_SQL_CASE's naming;
@@ -3887,7 +3877,7 @@ _MIX_TEXT_KINDS_SQL = (
 
 MIX_SIMPLE_SQL = f"""
 WITH blocks AS (
-{SYNTH_MIX_SQL}
+{synth_sql("mix")}
 ), k AS (
   SELECT doc_id, page, y1, text, {CLASSIFY_SQL_CASE} AS kind
   FROM blocks WHERE conf > 0.3
@@ -3962,6 +3952,20 @@ FROM seg GROUP BY doc_id, page
 """
 
 
+def _dual_spans(spark: SparkSession, sf_dir: str, family: str) -> DataFrame:
+    """The dual (E2) DAG over a family's dual twin, at the page height
+    the twin's C7 layer rects assume (H=550)."""
+    from dataclasses import replace
+
+    from ..core.document import DEFAULT_CONFIG
+    from ..pipeline.extract import extract_spans_flat
+
+    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
+    return extract_spans_flat(
+        synth_blocks(spark, sf_dir, family, dual=True), cfg, dual=True
+    )
+
+
 def q_dual_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full dual-source (E2) extraction DAG over the events-derived
     corpus: merge -> C7 flip -> gather -> levenshtein arbitration ->
@@ -3969,14 +3973,7 @@ def q_dual_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     xy-cut recursion isn't ANSI-SQL; the SQL-checkable arbitration
     slice is q_dual_arbitrate, and byte-exact goldens live in
     tests/test_dual_and_presets.py."""
-    from dataclasses import replace
-
-    from ..core.document import DEFAULT_CONFIG
-    from ..pipeline.adapter import synth_blocks_dual
-    from ..pipeline.extract import extract_spans_flat
-
-    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
-    return extract_spans_flat(synth_blocks_dual(spark, sf_dir), cfg, dual=True)
+    return _dual_spans(spark, sf_dir, "blocks")
 
 
 def q_dual_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3987,9 +3984,9 @@ def q_dual_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a family where every data-dependent stage provably
     degenerates:
 
-      * synth_blocks_simple geometry: zero pair intersections (merge =
-        identity), all-pairs x-overlap + >=26px y-gaps (xy-cut ==
-        ascending-y sort);
+      * the simple family's geometry (adapter.FAMILIES): zero pair
+        intersections (merge = identity), all-pairs x-overlap + >=26px
+        y-gaps (xy-cut == ascending-y sort);
       * layer rects are the exact C7 image of each bbox and pages are
         y-disjoint, so the gather returns exactly the row's own text;
       * arbitration (lev(ocr, native)/maxlen < 0.2 -> native else ocr)
@@ -3998,92 +3995,67 @@ def q_dual_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     So the driver hash-checks the dual pipeline END TO END here —
     including the doc-wide order — while the general dual corpus
     (q_dual_extract) stays rows-only under its golden suite."""
-    from dataclasses import replace
-
-    from ..core.document import DEFAULT_CONFIG
-    from ..pipeline.adapter import synth_blocks_dual_simple
-    from ..pipeline.extract import extract_spans_flat
-
-    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
-    return extract_spans_flat(
-        synth_blocks_dual_simple(spark, sf_dir), cfg, dual=True
-    )
+    return _dual_spans(spark, sf_dir, "simple")
 
 
 def q_dual_depth1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the DUAL DAG's xy-cut FIRST BRANCH (VERDICT r4
     #5): the REAL dual kernel (conf filter -> classify -> overlap merge
     -> C7 flip -> gather -> levenshtein arbitration -> CJK filters ->
-    xy-cut -> emit, pdf2txt.py:52-100) runs over the two-column dual
-    family (adapter.synth_blocks_dual_depth1) whose geometry admits
-    exactly ONE depth-0 vertical cut and whose degeneracy arguments
-    are subset-stable under the dual filters — so cut SELECTION + one
+    xy-cut -> emit, pdf2txt.py:52-100) runs over the depth1 family's
+    dual twin (adapter.FAMILIES) whose geometry admits exactly ONE
+    depth-0 vertical cut and whose degeneracy arguments are
+    subset-stable under the dual filters — so cut SELECTION + one
     recursive descent + arbitration + CJK filters are hash-checked
     cross-engine in one query.  q_dual_simple pinned only the cut-free
     base case; the general dual corpus (q_dual_extract) stays
     rows-only under its golden suite.  Reading order on this family is
     provably (page, column, y1), left column first."""
-    from dataclasses import replace
-
-    from ..core.document import DEFAULT_CONFIG
-    from ..pipeline.adapter import synth_blocks_dual_depth1
-    from ..pipeline.extract import extract_spans_flat
-
-    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
-    return extract_spans_flat(
-        synth_blocks_dual_depth1(spark, sf_dir), cfg, dual=True
-    )
+    return _dual_spans(spark, sf_dir, "depth1")
 
 
 def q_dual_threecol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the DUAL DAG's MULTI-cut xy-cut path: the REAL
-    dual kernel runs over the three-column dual family
-    (adapter.synth_blocks_dual_threecol) whose depth-0 sweep admits
-    exactly TWO valid cuts — pinning candidate dedup per gap, bisect
-    assignment over multiple cuts, and the reversed push of 3 children
-    for the dual pipeline (q_dual_depth1 pins only nseg=2), composed
-    with arbitration + CJK filters.  Completes the dual family's
-    parity with the flagship simple/depth1/threecol ladder."""
-    from dataclasses import replace
-
-    from ..core.document import DEFAULT_CONFIG
-    from ..pipeline.adapter import synth_blocks_dual_threecol
-    from ..pipeline.extract import extract_spans_flat
-
-    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
-    return extract_spans_flat(
-        synth_blocks_dual_threecol(spark, sf_dir), cfg, dual=True
-    )
+    dual kernel runs over the threecol family's dual twin
+    (adapter.FAMILIES) whose depth-0 sweep admits exactly TWO valid
+    cuts — pinning candidate dedup per gap, bisect assignment over
+    multiple cuts, and the reversed push of 3 children for the dual
+    pipeline (q_dual_depth1 pins only nseg=2), composed with
+    arbitration + CJK filters.  Completes the dual family's parity
+    with the flagship simple/depth1/threecol ladder."""
+    return _dual_spans(spark, sf_dir, "threecol")
 
 
 def q_dual_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the margin-DECAY schedule under the DUAL kernel:
-    the REAL dual DAG runs over the decay dual family
-    (adapter.synth_blocks_dual_decay) whose B/C pairs are separated by
-    an 8px y-gap that only the depth-3 DECAYED margin (10 -> 10 ->
-    8.75 -> 6.5625) admits — a constant-margin kernel would fall to
-    the x-major grid sort and emit C before B, flipping the doc-wide
-    hash.  flagship_decay pins the schedule for the flagship emission;
-    this pins it composed with C7 flip + gather + arbitration + CJK
+    the REAL dual DAG runs over the decay family's dual twin
+    (adapter.FAMILIES) whose B/C pairs are separated by an 8px y-gap
+    that only the depth-3 DECAYED margin (10 -> 10 -> 8.75 -> 6.5625)
+    admits — a constant-margin kernel would fall to the x-major grid
+    sort and emit C before B, flipping the doc-wide hash.
+    flagship_decay pins the schedule for the flagship emission; this
+    pins it composed with C7 flip + gather + arbitration + CJK
     filters.  Order provably (page, column, y1) for any surviving
-    subset (decay-family docstring's subset argument)."""
-    from dataclasses import replace
-
-    from ..core.document import DEFAULT_CONFIG
-    from ..pipeline.adapter import synth_blocks_dual_decay
-    from ..pipeline.extract import extract_spans_flat
-
-    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
-    return extract_spans_flat(
-        synth_blocks_dual_decay(spark, sf_dir), cfg, dual=True
-    )
+    subset (the decay family's subset argument)."""
+    return _dual_spans(spark, sf_dir, "decay")
 
 
 _ARB_SET_SQL = "('text','title','caption')"
 
-DUAL_DEPTH1_SQL = f"""
+# Reading-order column of every synthetic geometry family: 0 on the
+# single-column families, the column index over the x bases 100/400/700
+# of depth1, threecol and decay.
+_COL_KEY = "CAST(floor((x1 - 100) / 300) AS INT)"
+
+
+def _dual_sql(family: str) -> str:
+    """Oracle for the dual DAG over a family's dual twin: classify ->
+    C7 flip -> gather -> levenshtein arbitration -> CJK filters, emitted
+    in (page, column, y1) order — the xy-cut order the family's
+    geometry proves (adapter.FAMILIES)."""
+    return f"""
 WITH blocks AS (
-{SYNTH_DEPTH1_SQL}
+{synth_sql(family)}
 ), k AS (
   SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks
 ), layer AS (
@@ -4093,7 +4065,7 @@ WITH blocks AS (
   FROM k WHERE text IS NOT NULL
 ), dets AS (
   SELECT doc_id, page, "offset", y1 AS dy1, kind,
-    CASE WHEN x1 < 350 THEN 0 ELSE 1 END AS col,
+    {_COL_KEY} AS col,
     x1 / 2.0 AS qx1, 550.0 - y2 / 2.0 AS qy1,
     x2 / 2.0 AS qx2, 550.0 - y1 / 2.0 AS qy2,
     CASE WHEN "offset" % 4 = 0 THEN reverse(text)
@@ -4131,167 +4103,6 @@ WITH blocks AS (
 SELECT doc_id,
   CAST(row_number() OVER (PARTITION BY doc_id ORDER BY page, col, dy1) - 1
        AS INT) AS "order",
-  kind, text, CAST(NULL AS VARCHAR) AS media_ref
-FROM emitted
-"""
-
-DUAL_THREECOL_SQL = f"""
-WITH blocks AS (
-{SYNTH_THREECOL_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks
-), layer AS (
-  SELECT doc_id, page, "offset" AS l_offset, text AS l_text,
-    x1 / 2.0 AS lx1, 550.0 - y2 / 2.0 AS ly1,
-    x2 / 2.0 AS lx2, 550.0 - y1 / 2.0 AS ly2
-  FROM k WHERE text IS NOT NULL
-), dets AS (
-  SELECT doc_id, page, "offset", y1 AS dy1, kind,
-    CASE WHEN x1 < 350 THEN 0 WHEN x1 < 650 THEN 1 ELSE 2 END AS col,
-    x1 / 2.0 AS qx1, 550.0 - y2 / 2.0 AS qy1,
-    x2 / 2.0 AS qx2, 550.0 - y1 / 2.0 AS qy2,
-    CASE WHEN "offset" % 4 = 0 THEN reverse(text)
-         ELSE translate(text, 'ae', 'ea') END AS ocr
-  FROM k WHERE conf > 0.3 AND kind IN {_ARB_SET_SQL}
-), pairs AS (
-  SELECT d.doc_id, d.page, d."offset", l.l_offset, l.l_text
-  FROM dets d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE greatest(least(d.qx2, l.lx2) - greatest(d.qx1, l.lx1), 0)
-      * greatest(least(d.qy2, l.ly2) - greatest(d.qy1, l.ly1), 0)
-      > 0.5 * least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1))
-    AND least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1)) > 0
-), gathered AS (
-  SELECT doc_id, page, "offset",
-    string_agg(replace(l_text, chr(10), ''), '' ORDER BY l_offset)
-      AS pdf_text
-  FROM pairs GROUP BY doc_id, page, "offset"
-), arb AS (
-  SELECT d.doc_id, d.page, d.dy1, d.col, d.kind, d.ocr,
-    COALESCE(g.pdf_text, '') AS pdf_text
-  FROM dets d LEFT JOIN gathered g
-    ON d.doc_id = g.doc_id AND d.page = g.page AND d."offset" = g."offset"
-), picked AS (
-  SELECT doc_id, page, dy1, col, kind,
-    CASE WHEN levenshtein(ocr, pdf_text) * 1.0
-              / greatest(length(ocr), length(pdf_text), 1) < 0.2
-         THEN pdf_text ELSE ocr END AS text
-  FROM arb
-), emitted AS (
-  SELECT * FROM picked
-  WHERE NOT (text LIKE '图%' OR text LIKE '表%')
-    AND NOT (length(text) < 256
-             AND (text LIKE '%见表%' OR text LIKE '%见图%'))
-)
-SELECT doc_id,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY page, col, dy1) - 1
-       AS INT) AS "order",
-  kind, text, CAST(NULL AS VARCHAR) AS media_ref
-FROM emitted
-"""
-
-DUAL_DECAY_SQL = f"""
-WITH blocks AS (
-{SYNTH_DECAY_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks
-), layer AS (
-  SELECT doc_id, page, "offset" AS l_offset, text AS l_text,
-    x1 / 2.0 AS lx1, 550.0 - y2 / 2.0 AS ly1,
-    x2 / 2.0 AS lx2, 550.0 - y1 / 2.0 AS ly2
-  FROM k WHERE text IS NOT NULL
-), dets AS (
-  SELECT doc_id, page, "offset", y1 AS dy1, kind,
-    CASE WHEN x1 < 350 THEN 0 ELSE 1 END AS col,
-    x1 / 2.0 AS qx1, 550.0 - y2 / 2.0 AS qy1,
-    x2 / 2.0 AS qx2, 550.0 - y1 / 2.0 AS qy2,
-    CASE WHEN "offset" % 4 = 0 THEN reverse(text)
-         ELSE translate(text, 'ae', 'ea') END AS ocr
-  FROM k WHERE conf > 0.3 AND kind IN {_ARB_SET_SQL}
-), pairs AS (
-  SELECT d.doc_id, d.page, d."offset", l.l_offset, l.l_text
-  FROM dets d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE greatest(least(d.qx2, l.lx2) - greatest(d.qx1, l.lx1), 0)
-      * greatest(least(d.qy2, l.ly2) - greatest(d.qy1, l.ly1), 0)
-      > 0.5 * least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1))
-    AND least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1)) > 0
-), gathered AS (
-  SELECT doc_id, page, "offset",
-    string_agg(replace(l_text, chr(10), ''), '' ORDER BY l_offset)
-      AS pdf_text
-  FROM pairs GROUP BY doc_id, page, "offset"
-), arb AS (
-  SELECT d.doc_id, d.page, d.dy1, d.col, d.kind, d.ocr,
-    COALESCE(g.pdf_text, '') AS pdf_text
-  FROM dets d LEFT JOIN gathered g
-    ON d.doc_id = g.doc_id AND d.page = g.page AND d."offset" = g."offset"
-), picked AS (
-  SELECT doc_id, page, dy1, col, kind,
-    CASE WHEN levenshtein(ocr, pdf_text) * 1.0
-              / greatest(length(ocr), length(pdf_text), 1) < 0.2
-         THEN pdf_text ELSE ocr END AS text
-  FROM arb
-), emitted AS (
-  SELECT * FROM picked
-  WHERE NOT (text LIKE '图%' OR text LIKE '表%')
-    AND NOT (length(text) < 256
-             AND (text LIKE '%见表%' OR text LIKE '%见图%'))
-)
-SELECT doc_id,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY page, col, dy1) - 1
-       AS INT) AS "order",
-  kind, text, CAST(NULL AS VARCHAR) AS media_ref
-FROM emitted
-"""
-
-DUAL_SIMPLE_SQL = f"""
-WITH blocks AS (
-{SYNTH_SIMPLE_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks
-), layer AS (
-  SELECT doc_id, page, "offset" AS l_offset, text AS l_text,
-    x1 / 2.0 AS lx1, 550.0 - y2 / 2.0 AS ly1,
-    x2 / 2.0 AS lx2, 550.0 - y1 / 2.0 AS ly2
-  FROM k WHERE text IS NOT NULL
-), dets AS (
-  SELECT doc_id, page, "offset", y1 AS dy1, kind,
-    x1 / 2.0 AS qx1, 550.0 - y2 / 2.0 AS qy1,
-    x2 / 2.0 AS qx2, 550.0 - y1 / 2.0 AS qy2,
-    CASE WHEN "offset" % 4 = 0 THEN reverse(text)
-         ELSE translate(text, 'ae', 'ea') END AS ocr
-  FROM k WHERE conf > 0.3 AND kind IN {_ARB_SET_SQL}
-), pairs AS (
-  SELECT d.doc_id, d.page, d."offset", l.l_offset, l.l_text
-  FROM dets d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE greatest(least(d.qx2, l.lx2) - greatest(d.qx1, l.lx1), 0)
-      * greatest(least(d.qy2, l.ly2) - greatest(d.qy1, l.ly1), 0)
-      > 0.5 * least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1))
-    AND least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1)) > 0
-), gathered AS (
-  SELECT doc_id, page, "offset",
-    string_agg(replace(l_text, chr(10), ''), '' ORDER BY l_offset)
-      AS pdf_text
-  FROM pairs GROUP BY doc_id, page, "offset"
-), arb AS (
-  SELECT d.doc_id, d.page, d.dy1, d.kind, d.ocr,
-    COALESCE(g.pdf_text, '') AS pdf_text
-  FROM dets d LEFT JOIN gathered g
-    ON d.doc_id = g.doc_id AND d.page = g.page AND d."offset" = g."offset"
-), picked AS (
-  SELECT doc_id, page, dy1, kind,
-    CASE WHEN levenshtein(ocr, pdf_text) * 1.0
-              / greatest(length(ocr), length(pdf_text), 1) < 0.2
-         THEN pdf_text ELSE ocr END AS text
-  FROM arb
-), emitted AS (
-  SELECT * FROM picked
-  WHERE NOT (text LIKE '图%' OR text LIKE '表%')
-    AND NOT (length(text) < 256
-             AND (text LIKE '%见表%' OR text LIKE '%见图%'))
-)
-SELECT doc_id,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY page, dy1) - 1 AS INT)
-    AS "order",
   kind, text, CAST(NULL AS VARCHAR) AS media_ref
 FROM emitted
 """
@@ -4302,198 +4113,70 @@ def q_flagship_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     REAL page kernel (classify -> merge sweep -> containment -> gather
     -> xy-cut recursion -> emission) runs over a corpus family whose
     geometry provably collapses the recursion to an ascending-y sort
-    (synth_blocks_simple: all-pairs x-overlap kills depth-0 cuts,
-    >=26px y-gaps make every depth-1 cut isolate one block, no embedeq,
-    zero pair intersections).  On this family the whole DAG is
-    SQL-expressible, so the driver hash-checks extraction END TO END —
-    the general corpus stays rows-only (goldens cover it)."""
-    from ..pipeline.adapter import synth_blocks_simple
+    (the simple family, adapter.FAMILIES: all-pairs x-overlap kills
+    depth-0 cuts, >=26px y-gaps make every depth-1 cut isolate one
+    block, no embedeq, zero pair intersections).  On this family the
+    whole DAG is SQL-expressible, so the driver hash-checks extraction
+    END TO END — the general corpus stays rows-only (goldens cover
+    it)."""
     from ..pipeline.extract import extract_pages
 
-    return extract_pages(synth_blocks_simple(spark, sf_dir))
-
-
-_MEDIA_SET_SQL = "('figure','icon','qrcode','barcode')"
-
-FLAGSHIP_SIMPLE_SQL = f"""
-WITH blocks AS (
-{SYNTH_SIMPLE_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks WHERE conf > 0.3
-), layer AS (
-  SELECT doc_id, page, "offset", text, x1, y1, x2, y2,
-         (x2 - x1) * (y2 - y1) AS area
-  FROM blocks WHERE text IS NOT NULL
-), gathered AS (
-  SELECT d.doc_id, d.page, d."offset",
-    string_agg(l.text, '' ORDER BY l."offset") AS gtext
-  FROM k d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE d.kind IN {_TEXT_SET_SQL}
-    AND greatest(least(d.x2, l.x2) - greatest(d.x1, l.x1), 0)
-      * greatest(least(d.y2, l.y2) - greatest(d.y1, l.y1), 0)
-      > 0.5 * least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1))
-    AND least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1)) > 0
-  GROUP BY d.doc_id, d.page, d."offset"
-), emitted AS (
-  SELECT k.doc_id, k.page, k.y1, k.kind,
-    CASE
-      WHEN k.kind IN {_MEDIA_SET_SQL} THEN NULL
-      WHEN k.kind = 'equation' THEN e'\\n$$\\n' || k.text || e'\\n$$\\n'
-      WHEN k.kind = 'table' THEN k.text
-      ELSE COALESCE(g.gtext, '')
-    END AS text,
-    CASE WHEN k.kind IN {_MEDIA_SET_SQL} THEN k.media_ref END AS media_ref
-  FROM k LEFT JOIN gathered g
-    ON k.doc_id = g.doc_id AND k.page = g.page AND k."offset" = g."offset"
-  WHERE k.kind IN {_MEDIA_SET_SQL}
-     OR (k.kind = 'equation' AND k.text IS NOT NULL)
-     OR (k.kind = 'table' AND k.text IS NOT NULL)
-     OR k.kind IN {_TEXT_SET_SQL}
-)
-SELECT doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id, page ORDER BY y1) - 1 AS INT)
-    AS page_pos,
-  kind, text, media_ref
-FROM emitted
-"""
+    return extract_pages(synth_blocks(spark, sf_dir, "simple"))
 
 
 def q_flagship_depth1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the xy-cut recursion's FIRST BRANCH (VERDICT r2
-    #5): the REAL page kernel runs over the two-column family
-    (synth_blocks_depth1) whose geometry admits exactly ONE depth-0
+    #5): the REAL page kernel runs over the two-column depth1 family
+    (adapter.FAMILIES) whose geometry admits exactly ONE depth-0
     vertical cut, then degenerates — so cut SELECTION plus one
     recursive descent is hash-checked cross-engine (flagship_simple
     only pinned the cut-free base case).  Reading order on this family
     is provably (column, y1), left column first."""
-    from ..pipeline.adapter import synth_blocks_depth1
     from ..pipeline.extract import extract_pages
 
-    return extract_pages(synth_blocks_depth1(spark, sf_dir))
-
-
-FLAGSHIP_DEPTH1_SQL = f"""
-WITH blocks AS (
-{SYNTH_DEPTH1_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks WHERE conf > 0.3
-), layer AS (
-  SELECT doc_id, page, "offset", text, x1, y1, x2, y2,
-         (x2 - x1) * (y2 - y1) AS area
-  FROM blocks WHERE text IS NOT NULL
-), gathered AS (
-  SELECT d.doc_id, d.page, d."offset",
-    string_agg(l.text, '' ORDER BY l."offset") AS gtext
-  FROM k d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE d.kind IN {_TEXT_SET_SQL}
-    AND greatest(least(d.x2, l.x2) - greatest(d.x1, l.x1), 0)
-      * greatest(least(d.y2, l.y2) - greatest(d.y1, l.y1), 0)
-      > 0.5 * least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1))
-    AND least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1)) > 0
-  GROUP BY d.doc_id, d.page, d."offset"
-), emitted AS (
-  SELECT k.doc_id, k.page, k.y1, k.kind,
-    CASE WHEN k.x1 < 350 THEN 0 ELSE 1 END AS col,
-    CASE
-      WHEN k.kind IN {_MEDIA_SET_SQL} THEN NULL
-      WHEN k.kind = 'equation' THEN e'\\n$$\\n' || k.text || e'\\n$$\\n'
-      WHEN k.kind = 'table' THEN k.text
-      ELSE COALESCE(g.gtext, '')
-    END AS text,
-    CASE WHEN k.kind IN {_MEDIA_SET_SQL} THEN k.media_ref END AS media_ref
-  FROM k LEFT JOIN gathered g
-    ON k.doc_id = g.doc_id AND k.page = g.page AND k."offset" = g."offset"
-  WHERE k.kind IN {_MEDIA_SET_SQL}
-     OR (k.kind = 'equation' AND k.text IS NOT NULL)
-     OR (k.kind = 'table' AND k.text IS NOT NULL)
-     OR k.kind IN {_TEXT_SET_SQL}
-)
-SELECT doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id, page ORDER BY col, y1) - 1
-       AS INT) AS page_pos,
-  kind, text, media_ref
-FROM emitted
-"""
+    return extract_pages(synth_blocks(spark, sf_dir, "depth1"))
 
 
 def q_flagship_threecol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the xy-cut recursion's MULTI-cut path: the REAL
-    page kernel runs over the three-column family
-    (synth_blocks_threecol) whose depth-0 sweep admits exactly TWO
-    valid cuts — pinning candidate dedup per gap, bisect assignment of
-    blocks over multiple cuts, and the reversed push of 3 children
-    (flagship_depth1 only exercises nseg=2).  Reading order on this
-    family is provably (column, y1), columns left first."""
-    from ..pipeline.adapter import synth_blocks_threecol
+    page kernel runs over the threecol family (adapter.FAMILIES) whose
+    depth-0 sweep admits exactly TWO valid cuts — pinning candidate
+    dedup per gap, bisect assignment of blocks over multiple cuts, and
+    the reversed push of 3 children (flagship_depth1 only exercises
+    nseg=2).  Reading order on this family is provably (column, y1),
+    columns left first."""
     from ..pipeline.extract import extract_pages
 
-    return extract_pages(synth_blocks_threecol(spark, sf_dir))
-
-
-FLAGSHIP_THREECOL_SQL = f"""
-WITH blocks AS (
-{SYNTH_THREECOL_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks WHERE conf > 0.3
-), layer AS (
-  SELECT doc_id, page, "offset", text, x1, y1, x2, y2,
-         (x2 - x1) * (y2 - y1) AS area
-  FROM blocks WHERE text IS NOT NULL
-), gathered AS (
-  SELECT d.doc_id, d.page, d."offset",
-    string_agg(l.text, '' ORDER BY l."offset") AS gtext
-  FROM k d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE d.kind IN {_TEXT_SET_SQL}
-    AND greatest(least(d.x2, l.x2) - greatest(d.x1, l.x1), 0)
-      * greatest(least(d.y2, l.y2) - greatest(d.y1, l.y1), 0)
-      > 0.5 * least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1))
-    AND least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1)) > 0
-  GROUP BY d.doc_id, d.page, d."offset"
-), emitted AS (
-  SELECT k.doc_id, k.page, k.y1, k.kind,
-    CASE WHEN k.x1 < 350 THEN 0 WHEN k.x1 < 650 THEN 1 ELSE 2 END AS col,
-    CASE
-      WHEN k.kind IN {_MEDIA_SET_SQL} THEN NULL
-      WHEN k.kind = 'equation' THEN e'\\n$$\\n' || k.text || e'\\n$$\\n'
-      WHEN k.kind = 'table' THEN k.text
-      ELSE COALESCE(g.gtext, '')
-    END AS text,
-    CASE WHEN k.kind IN {_MEDIA_SET_SQL} THEN k.media_ref END AS media_ref
-  FROM k LEFT JOIN gathered g
-    ON k.doc_id = g.doc_id AND k.page = g.page AND k."offset" = g."offset"
-  WHERE k.kind IN {_MEDIA_SET_SQL}
-     OR (k.kind = 'equation' AND k.text IS NOT NULL)
-     OR (k.kind = 'table' AND k.text IS NOT NULL)
-     OR k.kind IN {_TEXT_SET_SQL}
-)
-SELECT doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id, page ORDER BY col, y1) - 1
-       AS INT) AS page_pos,
-  kind, text, media_ref
-FROM emitted
-"""
+    return extract_pages(synth_blocks(spark, sf_dir, "threecol"))
 
 
 def q_flagship_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the xy-cut MARGIN-DECAY schedule: the REAL page
-    kernel runs over synth_blocks_decay, whose B/C pairs have an 8px
-    y-gap that no cut reaches until depth 3, where the decayed margin
-    (10 -> 10 -> 8.75 -> 6.5625) first admits it.  A constant-margin
-    mutant never cuts the pair and falls through to the x-major grid
-    fallback, which emits C (left) before B — the opposite of the
-    decay order (B upper first) — so the cross-engine hash pins the
-    decay schedule itself, which flagship_simple/depth1/threecol never
-    exercise.  Reading order on this family is provably (column, y1)
-    under any conf-filter subset."""
-    from ..pipeline.adapter import synth_blocks_decay
+    kernel runs over the decay family (adapter.FAMILIES), whose B/C
+    pairs have an 8px y-gap that no cut reaches until depth 3, where
+    the decayed margin (10 -> 10 -> 8.75 -> 6.5625) first admits it.
+    A constant-margin mutant never cuts the pair and falls through to
+    the x-major grid fallback, which emits C (left) before B — the
+    opposite of the decay order (B upper first) — so the cross-engine
+    hash pins the decay schedule itself, which flagship_simple/depth1/
+    threecol never exercise.  Reading order on this family is provably
+    (column, y1) under any conf-filter subset."""
     from ..pipeline.extract import extract_pages
 
-    return extract_pages(synth_blocks_decay(spark, sf_dir))
+    return extract_pages(synth_blocks(spark, sf_dir, "decay"))
 
 
-FLAGSHIP_DECAY_SQL = f"""
+_MEDIA_SET_SQL = "('figure','icon','qrcode','barcode')"
+
+
+def _flagship_sql(family: str) -> str:
+    """Oracle for the flagship page DAG over a family: classify -> conf
+    filter -> gather -> emission, with page positions in (column, y1)
+    order — the xy-cut order the family's geometry proves
+    (adapter.FAMILIES)."""
+    return f"""
 WITH blocks AS (
-{SYNTH_DECAY_SQL}
+{synth_sql(family)}
 ), k AS (
   SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks WHERE conf > 0.3
 ), layer AS (
@@ -4512,7 +4195,7 @@ WITH blocks AS (
   GROUP BY d.doc_id, d.page, d."offset"
 ), emitted AS (
   SELECT k.doc_id, k.page, k.y1, k.kind,
-    CASE WHEN k.x1 < 350 THEN 0 ELSE 1 END AS col,
+    {_COL_KEY} AS col,
     CASE
       WHEN k.kind IN {_MEDIA_SET_SQL} THEN NULL
       WHEN k.kind = 'equation' THEN e'\\n$$\\n' || k.text || e'\\n$$\\n'
@@ -11891,65 +11574,83 @@ KIND_PIVOT_SQL = (
 
 _REGISTRY: dict[str, tuple[Callable, str | None]] = {
     # Entry order is driver-visible: the per-round CORRECTNESS snapshot
-    # covers the FIRST 50 entries in insertion order.  Round 5 rotates
-    # the final 43 never-driver-checked queries (r03 positions 51-85 +
-    # the 8 round-4 additions) to the front, completing the r03->r05
-    # rotation: after this window every registry query has appeared in
-    # at least one driver window.  Round-5 additions are inserted after
-    # the 43 (still inside the 50-window).  The local oracle gate
-    # (scripts/check_contract.py) covers ALL entries every round
-    # regardless of order.
+    # checks the FIRST 50 entries in insertion order.  One rule sets it:
+    #   1. every query whose callable or oracle reads a regenerated input
+    #      — here, each reader of a geometry family (pipeline/adapter.py
+    #      FAMILIES) — hash-checked ones first, then the rows-only
+    #      umbrellas, whose Spark row counts the snapshot still records;
+    #   2. then every other query, stalest first: ascending by the last
+    #      CORRECTNESS_rNN window it sat in, ties in the previous order.
+    # The local oracle gate (scripts/check_contract.py) covers ALL
+    # entries every round regardless of order.
     "header_footer_strip": (q_header_footer_strip, HEADER_FOOTER_SQL),
-    "dehyphenate": (q_dehyphenate, DEHYPHENATE_SQL),
-    "asof_join": (q_asof_join, ASOF_JOIN_SQL),
-    "embed_quantize": (q_embed_quantize, EMBED_QUANTIZE_SQL),
-    "pagerank": (q_pagerank, PAGERANK_SQL),
-    "length_quantiles": (q_length_quantiles, LENGTH_QUANTILES_SQL),
-    "dsir_weights": (q_dsir_weights, DSIR_WEIGHTS_SQL),
     "reading_order_eval": (q_reading_order_eval, READING_ORDER_EVAL_SQL),
-    "bigram_lm_score": (q_bigram_lm_score, BIGRAM_LM_SQL),
-    "filter_cascade": (q_filter_cascade, FILTER_CASCADE_SQL),
     "section_assign": (q_section_assign, SECTION_ASSIGN_SQL),
-    "bpe_merges": (q_bpe_merges, BPE_MERGES_SQL),
-    "label_propagation": (q_label_propagation, LABEL_PROPAGATION_SQL),
-    "embed_pca": (q_embed_pca, EMBED_PCA_SQL),
-    "event_attribution": (q_event_attribution, EVENT_ATTRIBUTION_SQL),
-    "ngram_coverage": (q_ngram_coverage, NGRAM_COVERAGE_SQL),
-    "vocab_growth": (q_vocab_growth, VOCAB_GROWTH_SQL),
-    "snapshot_diff": (q_snapshot_diff, SNAPSHOT_DIFF_SQL),
-    "skew_profile": (q_skew_profile, SKEW_PROFILE_SQL),
-    "zorder_layout": (q_zorder_layout, ZORDER_LAYOUT_SQL),
-    "bpe_encode": (q_bpe_encode, BPE_ENCODE_SQL),
     "media_dedup": (q_media_dedup, MEDIA_DEDUP_SQL),
-    "event_transitions": (q_event_transitions, EVENT_TRANSITIONS_SQL),
-    "join_size_estimate": (q_join_size_estimate, JOIN_SIZE_ESTIMATE_SQL),
-    "triangle_count": (q_triangle_count, TRIANGLE_COUNT_SQL),
-    "watermark_lag_stats": (q_watermark_lag_stats, WATERMARK_LAG_SQL),
-    "cluster_purity": (q_cluster_purity, CLUSTER_PURITY_SQL),
-    "scan_prune_stats": (q_scan_prune_stats, SCAN_PRUNE_SQL),
-    "column_stats": (q_column_stats, COLUMN_STATS_SQL),
-    "value_histogram": (q_value_histogram, VALUE_HISTOGRAM_SQL),
-    "k_anonymity": (q_k_anonymity, K_ANONYMITY_SQL),
-    "compaction_plan": (q_compaction_plan, COMPACTION_PLAN_SQL),
-    "classifier_pr_eval": (q_classifier_pr_eval, CLASSIFIER_PR_EVAL_SQL),
     "kind_pivot": (q_kind_pivot, KIND_PIVOT_SQL),
-    "ngram_containment": (q_ngram_containment, NGRAM_CONTAINMENT_SQL),
-    "mix_trunc": (q_mix_trunc, MIX_TRUNC_SQL),
-    "cetd_depth2": (q_cetd_depth2, CETD_DEPTH2_SQL),
-    "ann_ivfpq": (q_ann_ivfpq, ANN_IVFPQ_SQL),
-    "ann_ivfpq_recall": (q_ann_ivfpq_recall, ANN_IVFPQ_RECALL_SQL),
-    "ngram_novelty": (q_ngram_novelty, NGRAM_NOVELTY_SQL),
-    "ann_ivfpq_multiprobe": (q_ann_ivfpq_multiprobe, ANN_IVFPQ_MULTIPROBE_SQL),
-    "minhash_pr_eval": (q_minhash_pr_eval, MINHASH_PR_EVAL_SQL),
-    "unigram_drift": (q_unigram_drift, UNIGRAM_DRIFT_SQL),
-    # --- end of never-driver-checked block (43); round-5 additions below ---
-    "dual_depth1": (q_dual_depth1, DUAL_DEPTH1_SQL),
-    "dedup_agreement": (q_dedup_agreement, DEDUP_AGREEMENT_SQL),
-    "dual_threecol": (q_dual_threecol, DUAL_THREECOL_SQL),
-    "dual_decay": (q_dual_decay, DUAL_DECAY_SQL),
-    "flagship_threecol": (q_flagship_threecol, FLAGSHIP_THREECOL_SQL),
-    "flagship_decay": (q_flagship_decay, FLAGSHIP_DECAY_SQL),
-    "dual_simple": (q_dual_simple, DUAL_SIMPLE_SQL),
+    "dual_depth1": (q_dual_depth1, _dual_sql("depth1")),
+    "dual_threecol": (q_dual_threecol, _dual_sql("threecol")),
+    "dual_decay": (q_dual_decay, _dual_sql("decay")),
+    "flagship_threecol": (q_flagship_threecol, _flagship_sql("threecol")),
+    "flagship_decay": (q_flagship_decay, _flagship_sql("decay")),
+    "dual_simple": (q_dual_simple, _dual_sql("simple")),
+    "pad_plan": (q_pad_plan, PAD_PLAN_SQL),
+    "media_bg_mode": (q_media_bg_mode, MEDIA_BG_MODE_SQL),
+    "viz_overlay": (q_viz_overlay, _viz_overlay_sql()),
+    "frame_sample": (q_frame_sample, FRAME_SAMPLE_SQL),
+    "interleave_stats": (q_interleave_stats, INTERLEAVE_STATS_SQL),
+    "caption_pairs": (q_caption_pairs, CAPTION_PAIRS_SQL),
+    "page_assembly": (q_page_assembly, PAGE_ASSEMBLY_SQL),
+    "grid_rank": (q_grid_rank, GRID_RANK_SQL),
+    "overlap_pairs": (q_overlap_pairs, OVERLAP_PAIRS_SQL),
+    "containment_pairs": (q_containment_pairs, CONTAINMENT_SQL),
+    "classify_counts": (q_classify_counts, CLASSIFY_COUNTS_SQL),
+    "confidence_filter": (q_confidence_filter, CONFIDENCE_SQL),
+    "media_manifest": (q_media_manifest, MEDIA_MANIFEST_SQL),
+    "audio_windows": (q_audio_windows, AUDIO_WINDOWS_SQL),
+    "ocr_route": (q_ocr_route, OCR_ROUTE_SQL),
+    "ocr_route_report": (q_ocr_route_report, OCR_ROUTE_REPORT_SQL),
+    "position_rank": (q_position_rank, POSITION_RANK_SQL),
+    "dual_arbitrate": (q_dual_arbitrate, DUAL_ARBITRATE_SQL),
+    "mix_simple": (q_mix_simple, MIX_SIMPLE_SQL),
+    "flagship_simple": (q_flagship_simple, _flagship_sql("simple")),
+    "flagship_depth1": (q_flagship_depth1, _flagship_sql("depth1")),
+    "mix_interleave": (q_mix_interleave, None),
+    "dual_extract": (q_dual_extract, None),
+    "flagship_extract": (q_flagship_extract, None),
+    "pricing_summary": (q_pricing_summary, PRICING_SQL),
+    "revenue_by_nation": (q_revenue_by_nation, REVENUE_SQL),
+    "topk_orders": (q_topk_orders, TOPK_SQL),
+    "sessionize": (q_sessionize, SESSIONIZE_SQL),
+    "ship_window_pairs": (q_ship_window_pairs, SHIP_WINDOW_SQL),
+    "union_dedup": (q_union_dedup, UNION_DEDUP_SQL),
+    "levenshtein_arbitration": (q_levenshtein_arbitration, LEVENSHTEIN_SQL),
+    "dedup_exact": (q_dedup_exact, DEDUP_EXACT_SQL),
+    "minhash_pairs": (q_minhash_pairs, MINHASH_SQL),
+    "dedup_clusters": (q_dedup_clusters, DEDUP_CLUSTERS_SQL),
+    "dedup_clusters_star": (q_dedup_clusters_star, DEDUP_CLUSTERS_SQL),
+    "dedup_canonical": (q_dedup_canonical, DEDUP_CANONICAL_SQL),
+    "simhash_buckets": (q_simhash_buckets, SIMHASH_SQL),
+    "simhash_pairs": (q_simhash_pairs, SIMHASH_PAIRS_SQL),
+    "ann_pq": (q_ann_pq, ANN_PQ_SQL),
+    "corpus_rollup": (q_corpus_rollup, CORPUS_ROLLUP_SQL),
+    "rolling_activity": (q_rolling_activity, ROLLING_ACTIVITY_SQL),
+    "quality_deciles": (q_quality_deciles, QUALITY_DECILES_SQL),
+    "stitch_fragments": (q_stitch_fragments, STITCH_FRAGMENTS_SQL),
+    "cosine_topk": (q_cosine_topk, COSINE_SQL),
+    "token_stats": (q_token_stats, TOKEN_STATS_SQL),
+    "quality_score": (q_quality_score, QUALITY_SQL),
+    "langid": (q_langid, LANGID_SQL),
+    "rep_ngrams": (q_rep_ngrams, REP_NGRAMS_SQL),
+    "pii_scrub": (q_pii_scrub, PII_SCRUB_SQL),
+    "fingerprint": (q_fingerprint, FINGERPRINT_SQL),
+    "stratified_sample": (q_stratified_sample, STRATIFIED_SAMPLE_SQL),
+    "ngram_jaccard": (q_ngram_jaccard, NGRAM_JACCARD_SQL),
+    "ann_ivf": (q_ann_ivf, ANN_IVF_SQL),
+    "ann_ivf_multiprobe": (q_ann_ivf_multiprobe, ANN_IVF_MULTIPROBE_SQL),
+    "dedup_embedding": (q_dedup_embedding, DEDUP_EMBEDDING_SQL),
+    "boilerplate_strip": (q_boilerplate_strip, BOILERPLATE_SQL),
+    "boilerplate_cetd": (q_boilerplate_cetd, None),
     "cetd_simple": (q_cetd_simple, CETD_SIMPLE_SQL),
     "dedup_incremental": (q_dedup_incremental, DEDUP_INCREMENTAL_SQL),
     "bloom_dedup": (q_bloom_dedup, BLOOM_DEDUP_SQL),
@@ -11967,9 +11668,6 @@ _REGISTRY: dict[str, tuple[Callable, str | None]] = {
     "coreset_sample": (q_coreset_sample, CORESET_SAMPLE_SQL),
     "table_cells": (q_table_cells, TABLE_CELLS_SQL),
     "table_export": (q_table_export, TABLE_EXPORT_SQL),
-    "pad_plan": (q_pad_plan, PAD_PLAN_SQL),
-    "media_bg_mode": (q_media_bg_mode, MEDIA_BG_MODE_SQL),
-    "viz_overlay": (q_viz_overlay, _viz_overlay_sql()),
     "decontaminate": (q_decontaminate, DECONTAMINATE_SQL),
     "pack_chunks": (q_pack_chunks, PACK_CHUNKS_SQL),
     "bm25_topk": (q_bm25_topk, BM25_SQL),
@@ -11979,7 +11677,6 @@ _REGISTRY: dict[str, tuple[Callable, str | None]] = {
     "corpus_curate": (q_corpus_curate, CORPUS_CURATE_SQL),
     "substring_dedup": (q_substring_dedup, SUBSTRING_DEDUP_SQL),
     "quality_classifier": (q_quality_classifier, QUALITY_CLASSIFIER_SQL),
-    "frame_sample": (q_frame_sample, FRAME_SAMPLE_SQL),
     "semdedup": (q_semdedup, SEMDEDUP_SQL),
     "text_normalize": (q_text_normalize, TEXT_NORMALIZE_SQL),
     "chunk_overlap": (q_chunk_overlap, CHUNK_OVERLAP_SQL),
@@ -11987,69 +11684,52 @@ _REGISTRY: dict[str, tuple[Callable, str | None]] = {
     "ann_recall": (q_ann_recall, ANN_RECALL_SQL),
     "dedup_stats": (q_dedup_stats, DEDUP_STATS_SQL),
     "corpus_profile": (q_corpus_profile, CORPUS_PROFILE_SQL),
-    "interleave_stats": (q_interleave_stats, INTERLEAVE_STATS_SQL),
     "minhash_calibration": (q_minhash_calibration, MINHASH_CALIBRATION_SQL),
-    "caption_pairs": (q_caption_pairs, CAPTION_PAIRS_SQL),
     "shuffle_shards": (q_shuffle_shards, SHUFFLE_SHARDS_SQL),
     "mixture_weights": (q_mixture_weights, MIXTURE_WEIGHTS_SQL),
     "corpus_select": (q_corpus_select, CORPUS_SELECT_SQL),
     "bpe_pair_counts": (q_bpe_pair_counts, BPE_PAIR_COUNTS_SQL),
     "mixture_sample": (q_mixture_sample, MIXTURE_SAMPLE_SQL),
     "dedup_soft": (q_dedup_soft, DEDUP_SOFT_SQL),
-    "pricing_summary": (q_pricing_summary, PRICING_SQL),
-    "revenue_by_nation": (q_revenue_by_nation, REVENUE_SQL),
-    "topk_orders": (q_topk_orders, TOPK_SQL),
-    "page_assembly": (q_page_assembly, PAGE_ASSEMBLY_SQL),
-    "sessionize": (q_sessionize, SESSIONIZE_SQL),
-    "grid_rank": (q_grid_rank, GRID_RANK_SQL),
-    "overlap_pairs": (q_overlap_pairs, OVERLAP_PAIRS_SQL),
-    "containment_pairs": (q_containment_pairs, CONTAINMENT_SQL),
-    "ship_window_pairs": (q_ship_window_pairs, SHIP_WINDOW_SQL),
-    "classify_counts": (q_classify_counts, CLASSIFY_COUNTS_SQL),
-    "confidence_filter": (q_confidence_filter, CONFIDENCE_SQL),
-    "media_manifest": (q_media_manifest, MEDIA_MANIFEST_SQL),
-    "union_dedup": (q_union_dedup, UNION_DEDUP_SQL),
-    "levenshtein_arbitration": (q_levenshtein_arbitration, LEVENSHTEIN_SQL),
-    "dedup_exact": (q_dedup_exact, DEDUP_EXACT_SQL),
-    "minhash_pairs": (q_minhash_pairs, MINHASH_SQL),
-    "dedup_clusters": (q_dedup_clusters, DEDUP_CLUSTERS_SQL),
-    "dedup_clusters_star": (q_dedup_clusters_star, DEDUP_CLUSTERS_SQL),
-    "dedup_canonical": (q_dedup_canonical, DEDUP_CANONICAL_SQL),
-    "simhash_buckets": (q_simhash_buckets, SIMHASH_SQL),
-    "simhash_pairs": (q_simhash_pairs, SIMHASH_PAIRS_SQL),
-    "ann_pq": (q_ann_pq, ANN_PQ_SQL),
-    "corpus_rollup": (q_corpus_rollup, CORPUS_ROLLUP_SQL),
-    "rolling_activity": (q_rolling_activity, ROLLING_ACTIVITY_SQL),
-    "quality_deciles": (q_quality_deciles, QUALITY_DECILES_SQL),
-    "stitch_fragments": (q_stitch_fragments, STITCH_FRAGMENTS_SQL),
-    "audio_windows": (q_audio_windows, AUDIO_WINDOWS_SQL),
-    "cosine_topk": (q_cosine_topk, COSINE_SQL),
-    "token_stats": (q_token_stats, TOKEN_STATS_SQL),
-    "quality_score": (q_quality_score, QUALITY_SQL),
-    "langid": (q_langid, LANGID_SQL),
-    "rep_ngrams": (q_rep_ngrams, REP_NGRAMS_SQL),
-    "pii_scrub": (q_pii_scrub, PII_SCRUB_SQL),
-    "fingerprint": (q_fingerprint, FINGERPRINT_SQL),
-    "stratified_sample": (q_stratified_sample, STRATIFIED_SAMPLE_SQL),
-    "ngram_jaccard": (q_ngram_jaccard, NGRAM_JACCARD_SQL),
-    "ann_ivf": (q_ann_ivf, ANN_IVF_SQL),
-    "ann_ivf_multiprobe": (q_ann_ivf_multiprobe, ANN_IVF_MULTIPROBE_SQL),
-    "dedup_embedding": (q_dedup_embedding, DEDUP_EMBEDDING_SQL),
-    "boilerplate_strip": (q_boilerplate_strip, BOILERPLATE_SQL),
-    "boilerplate_cetd": (q_boilerplate_cetd, None),
-    "ocr_route": (q_ocr_route, OCR_ROUTE_SQL),
-    "ocr_route_report": (q_ocr_route_report, OCR_ROUTE_REPORT_SQL),
-    "position_rank": (q_position_rank, POSITION_RANK_SQL),
-    "dual_arbitrate": (q_dual_arbitrate, DUAL_ARBITRATE_SQL),
-    "mix_interleave": (q_mix_interleave, None),
-    "mix_simple": (q_mix_simple, MIX_SIMPLE_SQL),
-    # rows-only umbrellas grouped OUTSIDE the 50-entry driver window so
-    # every windowed entry is hash-checkable (their degenerate twins
-    # simple/depth1/threecol[/decay] are windowed or already checked):
-    "dual_extract": (q_dual_extract, None),
-    "flagship_extract": (q_flagship_extract, None),
-    "flagship_simple": (q_flagship_simple, FLAGSHIP_SIMPLE_SQL),
-    "flagship_depth1": (q_flagship_depth1, FLAGSHIP_DEPTH1_SQL),
+    "dehyphenate": (q_dehyphenate, DEHYPHENATE_SQL),
+    "asof_join": (q_asof_join, ASOF_JOIN_SQL),
+    "embed_quantize": (q_embed_quantize, EMBED_QUANTIZE_SQL),
+    "pagerank": (q_pagerank, PAGERANK_SQL),
+    "length_quantiles": (q_length_quantiles, LENGTH_QUANTILES_SQL),
+    "dsir_weights": (q_dsir_weights, DSIR_WEIGHTS_SQL),
+    "bigram_lm_score": (q_bigram_lm_score, BIGRAM_LM_SQL),
+    "filter_cascade": (q_filter_cascade, FILTER_CASCADE_SQL),
+    "bpe_merges": (q_bpe_merges, BPE_MERGES_SQL),
+    "label_propagation": (q_label_propagation, LABEL_PROPAGATION_SQL),
+    "embed_pca": (q_embed_pca, EMBED_PCA_SQL),
+    "event_attribution": (q_event_attribution, EVENT_ATTRIBUTION_SQL),
+    "ngram_coverage": (q_ngram_coverage, NGRAM_COVERAGE_SQL),
+    "vocab_growth": (q_vocab_growth, VOCAB_GROWTH_SQL),
+    "snapshot_diff": (q_snapshot_diff, SNAPSHOT_DIFF_SQL),
+    "skew_profile": (q_skew_profile, SKEW_PROFILE_SQL),
+    "zorder_layout": (q_zorder_layout, ZORDER_LAYOUT_SQL),
+    "bpe_encode": (q_bpe_encode, BPE_ENCODE_SQL),
+    "event_transitions": (q_event_transitions, EVENT_TRANSITIONS_SQL),
+    "join_size_estimate": (q_join_size_estimate, JOIN_SIZE_ESTIMATE_SQL),
+    "triangle_count": (q_triangle_count, TRIANGLE_COUNT_SQL),
+    "watermark_lag_stats": (q_watermark_lag_stats, WATERMARK_LAG_SQL),
+    "cluster_purity": (q_cluster_purity, CLUSTER_PURITY_SQL),
+    "scan_prune_stats": (q_scan_prune_stats, SCAN_PRUNE_SQL),
+    "column_stats": (q_column_stats, COLUMN_STATS_SQL),
+    "value_histogram": (q_value_histogram, VALUE_HISTOGRAM_SQL),
+    "k_anonymity": (q_k_anonymity, K_ANONYMITY_SQL),
+    "compaction_plan": (q_compaction_plan, COMPACTION_PLAN_SQL),
+    "classifier_pr_eval": (q_classifier_pr_eval, CLASSIFIER_PR_EVAL_SQL),
+    "ngram_containment": (q_ngram_containment, NGRAM_CONTAINMENT_SQL),
+    "mix_trunc": (q_mix_trunc, MIX_TRUNC_SQL),
+    "cetd_depth2": (q_cetd_depth2, CETD_DEPTH2_SQL),
+    "ann_ivfpq": (q_ann_ivfpq, ANN_IVFPQ_SQL),
+    "ann_ivfpq_recall": (q_ann_ivfpq_recall, ANN_IVFPQ_RECALL_SQL),
+    "ngram_novelty": (q_ngram_novelty, NGRAM_NOVELTY_SQL),
+    "ann_ivfpq_multiprobe": (q_ann_ivfpq_multiprobe, ANN_IVFPQ_MULTIPROBE_SQL),
+    "minhash_pr_eval": (q_minhash_pr_eval, MINHASH_PR_EVAL_SQL),
+    "unigram_drift": (q_unigram_drift, UNIGRAM_DRIFT_SQL),
+    "dedup_agreement": (q_dedup_agreement, DEDUP_AGREEMENT_SQL),
 }
 
 

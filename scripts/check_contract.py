@@ -3,6 +3,9 @@ queries() entry on Spark and its oracle_sql() on DuckDB over the same
 sf dir, compare row count + column names + order-insensitive values.
 
 Usage: python scripts/check_contract.py [sf_dir] [query ...]
+
+The Spark session is local[$SPARK_GRAFT_CPUS] (default: the host's CPU
+count) with a 4g driver unless SPARK_DRIVER_MEM says otherwise.
 """
 
 from __future__ import annotations
@@ -46,8 +49,12 @@ def main():
     from latyas_spark.pipeline.session import build_session
     from latyas_spark.relational.registry import oracle_sql, queries
 
-    spark = build_session(master="local[8]", shuffle_partitions=16,
-                          app_name="contract-check")
+    # build_session's 32g driver default is sized for a 32-core bench
+    # host; on a smaller host the driver heap grows until the OOM killer
+    # ends the run.  The oracle corpora need a small fraction of 4g.
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
+    spark = build_session(master=f"local[{cpus}]", app_name="contract-check")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
