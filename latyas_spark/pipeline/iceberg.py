@@ -1,58 +1,52 @@
-"""Iceberg-backed checkpoint/resume (optional runtime).
+"""Iceberg store for the checkpoint driver (optional runtime).
 
-``checkpoint.py`` implements the design's documented parquet fallback;
+``checkpoint.py`` holds the one bucket loop and its parquet store;
 this module is the design target when ``iceberg-spark-runtime`` is on
-the classpath (SURVEY.md §1.4, §4.3):
+the classpath (SURVEY.md §1.4, §4.3), run by the same driver:
 
 * spans land in an Iceberg table partitioned by the HIDDEN transform
   ``bucket(N, doc_id)`` — readers filtering on doc_id prune to one
   bucket file set with no derived column in the schema;
 * each checkpoint bucket commits with ONE overwrite-by-filter
   (``writeTo(...).overwrite(col("ckpt_bucket") == b)``) — atomic and
-  idempotent per bucket, the Iceberg analog of the parquet writer's
+  idempotent per bucket, the Iceberg analog of the parquet store's
   overwrite-per-bucket-directory + manifest rename;
-* the manifest is an Iceberg ``checkpoint`` table (one row per
-  completed bucket, lineage as a nested array) instead of JSON files;
+* the manifest is an Iceberg ``checkpoint`` table (one
+  ``manifest_row`` per completed bucket, lineage as a nested array);
   resume reads done buckets with a snapshot-consistent scan.
 
 No Iceberg Python bindings exist to import — the integration is pure
 Spark SQL / DataFrame API against the catalog the jar provides, so
 this module imports cleanly WITHOUT the jar and fails only when used.
-Callers gate on ``iceberg_jar_present()``; the test suite
-(tests/test_iceberg_optional.py) skips, not fails, in jar-less
-sandboxes.  The control flow deliberately mirrors
-``checkpoint.run_checkpointed`` (same drift guard, same fail_after
-hook, same summary dict) so the two backends stay drop-in swappable.
-
-All checkpoint-commit PLANNING — DDL strings, the overwrite-filter
-predicate, config-drift checking, the resume work list, manifest row
-construction — is factored into pure functions below, unit-tested
-without a live catalog (tests/test_iceberg_optional.py's ungated
-half); only the thin executors that call ``spark.sql``/``writeTo``
-remain jar-gated.
+Callers gate on ``iceberg_jar_present()``; tests/test_iceberg_optional.py
+skips, not fails, in jar-less sandboxes.  The planning — DDL strings,
+predicates, and the drift check, resume list and manifest row
+re-exported from ``checkpoint.py`` — is pure and unit-tested without a
+catalog (tests/test_iceberg_planning.py).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import glob
 import os
-import time
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.document import DEFAULT_CONFIG, ExtractConfig
-from .checkpoint import config_fingerprint, with_bucket
-from .extract import MEGA_THRESHOLD, extract_spans_flat
-from .session import build_session
-
-# Manifest schema shared by the commit path and the pure row builder.
-CHECKPOINT_SCHEMA = (
-    "run_id string, bucket int, status string, "
-    "config_sha string, spans bigint, wall_sec double, "
-    "lineage array<struct<partition_id: int, spans: bigint>>"
+from .checkpoint import (  # noqa: F401  (re-exported planning helpers)
+    CHECKPOINT_SCHEMA,
+    _run_buckets,
+    check_config_drift,
+    config_fingerprint,
+    manifest_row,
+    remaining_buckets,
+    with_bucket,
 )
+from .extract import MEGA_THRESHOLD
+from .session import build_session
 
 
 # -- pure planning functions (no catalog, no JVM) ---------------------------
@@ -77,9 +71,7 @@ def checkpoint_table_ddl(ns: str) -> str:
     bucket, lineage as a nested array)."""
     return (
         f"CREATE TABLE IF NOT EXISTS {ns}.checkpoint (\n"
-        "  run_id STRING, bucket INT, status STRING, config_sha STRING,\n"
-        "  spans BIGINT, wall_sec DOUBLE,\n"
-        "  lineage ARRAY<STRUCT<partition_id: INT, spans: BIGINT>>\n"
+        f"  {CHECKPOINT_SCHEMA}\n"
         ") USING iceberg"
     )
 
@@ -102,55 +94,6 @@ def doc_id_prune_sql(doc_id: str) -> str:
     reader never names it, it just filters on doc_id."""
     escaped = doc_id.replace("'", "''")
     return f"doc_id = '{escaped}'"
-
-
-def check_config_drift(
-    done_rows: Sequence[tuple], fp: str
-) -> set:
-    """Validate resume state against this run's config fingerprint.
-
-    ``done_rows`` is [(bucket, config_sha), ...] from the manifest.
-    Returns the set of completed bucket ids; raises ValueError on any
-    bucket extracted under a DIFFERENT config (finishing a run under a
-    changed config would silently mix extraction semantics)."""
-    for b, prev in done_rows:
-        if prev is not None and prev != fp:
-            raise ValueError(
-                f"resume config drift: bucket {b} was extracted under "
-                f"config_sha {prev[:12]}..., this run is {fp[:12]}...; "
-                "finish with the original config or write to a new table"
-            )
-    return {b for b, _ in done_rows}
-
-
-def remaining_buckets(n_buckets: int, done: set) -> list:
-    """The resume work list: bucket ids still to extract, in commit
-    order.  Ids in ``done`` outside [0, n_buckets) are tolerated (a
-    widened re-run with fewer buckets skips them naturally)."""
-    return [b for b in range(n_buckets) if b not in done]
-
-
-def manifest_row(
-    run_id: str,
-    bucket: int,
-    fp: str,
-    lineage_rows: Sequence[tuple],
-    wall_sec: float,
-) -> tuple:
-    """One manifest row (CHECKPOINT_SCHEMA order) from the per-Spark-
-    partition lineage counts [(partition_id, spans), ...].  The span
-    total is derived from the lineage, never passed separately — the
-    two cannot disagree."""
-    lrows = sorted((int(p), int(c)) for p, c in lineage_rows)
-    return (
-        run_id,
-        bucket,
-        "done",
-        fp,
-        sum(c for _, c in lrows),
-        round(wall_sec, 3),
-        [{"partition_id": p, "spans": c} for p, c in lrows],
-    )
 
 
 # -- jar-gated executors ----------------------------------------------------
@@ -228,6 +171,30 @@ def completed_buckets_iceberg(spark: SparkSession, ns: str) -> list:
     return sorted((r["bucket"], r["config_sha"]) for r in rows)
 
 
+@dataclasses.dataclass
+class _IcebergStore:
+    spark: SparkSession
+    ns: str
+
+    def done(self) -> list:
+        return completed_buckets_iceberg(self.spark, self.ns)
+
+    def write(self, b: int, spans: DataFrame) -> DataFrame:
+        # the overwrite-by-filter commit: replaces exactly this bucket's
+        # rows in one atomic Iceberg snapshot
+        spans.withColumn("ckpt_bucket", F.lit(b).cast("int")).writeTo(
+            f"{self.ns}.spans"
+        ).overwrite(F.expr(overwrite_filter_sql(b)))
+        return self.spark.table(f"{self.ns}.spans").filter(F.col("ckpt_bucket") == b)
+
+    def commit(self, row: tuple) -> None:
+        # appended AFTER the data commit: a crash between the two re-runs
+        # the bucket, and the overwrite makes that safe
+        self.spark.createDataFrame([row], schema=CHECKPOINT_SCHEMA).writeTo(
+            f"{self.ns}.checkpoint"
+        ).append()
+
+
 def run_checkpointed_iceberg(
     spark: SparkSession,
     joined: DataFrame,
@@ -238,57 +205,13 @@ def run_checkpointed_iceberg(
     fail_after: Optional[int] = None,
     run_id: str = "run-0",
 ) -> dict:
-    """checkpoint.run_checkpointed with Iceberg commits.
-
-    Identical contract: extract bucket-by-bucket, skip buckets already
-    recorded done, refuse config drift, return {buckets_done,
-    buckets_skipped, spans_written}.  Differences are the commit
-    mechanics only: span data commits via overwrite-by-filter on
-    ``ckpt_bucket`` (atomic + idempotent — re-running a bucket replaces
-    exactly its own rows), the manifest via an append to the
-    ``checkpoint`` table AFTER the data commit (a crash between the two
-    re-runs that bucket; the overwrite makes that safe)."""
-    fp = config_fingerprint(cfg, mega_threshold)
+    """checkpoint.run_checkpointed with Iceberg commits: the same
+    driver over the ``{ns}.spans`` and ``{ns}.checkpoint`` tables."""
     ensure_tables(spark, ns, n_buckets)
-    done = check_config_drift(completed_buckets_iceberg(spark, ns), fp)
-    bucketed = with_bucket(joined, n_buckets)
-
-    spans_written = 0
-    processed = 0
-    for b in remaining_buckets(n_buckets, done):
-        if fail_after is not None and processed >= fail_after:
-            raise RuntimeError(f"injected failure after {processed} buckets")
-        t0 = time.perf_counter()
-        part = bucketed.filter(F.col("bucket") == b).drop("bucket")
-        spans = extract_spans_flat(part, cfg, mega_threshold=mega_threshold)
-        spans = spans.withColumn("_pid", F.spark_partition_id()).withColumn(
-            "ckpt_bucket", F.lit(b).cast("int")
-        )
-        # the overwrite-by-filter commit: replaces exactly this
-        # bucket's rows in one atomic Iceberg snapshot (predicate text
-        # = overwrite_filter_sql(b))
-        spans.writeTo(f"{ns}.spans").overwrite(F.expr(overwrite_filter_sql(b)))
-
-        written = spark.table(f"{ns}.spans").filter(
-            F.col("ckpt_bucket") == b
-        )
-        lineage = written.groupBy("_pid").agg(F.count("*").alias("cnt"))
-        lrows = [
-            (int(r["_pid"]), int(r["cnt"])) for r in lineage.collect()
-        ]
-        row = manifest_row(
-            run_id, b, fp, lrows, time.perf_counter() - t0
-        )
-        manifest = spark.createDataFrame([row], schema=CHECKPOINT_SCHEMA)
-        manifest.writeTo(f"{ns}.checkpoint").append()
-        spans_written += row[4]
-        processed += 1
-
-    return {
-        "buckets_done": processed,
-        "buckets_skipped": len(done),
-        "spans_written": spans_written,
-    }
+    return _run_buckets(
+        _IcebergStore(spark, ns), joined, n_buckets, cfg,
+        mega_threshold, fail_after, run_id,
+    )
 
 
 def read_checkpointed_iceberg(spark: SparkSession, ns: str) -> DataFrame:

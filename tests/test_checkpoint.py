@@ -64,6 +64,8 @@ def test_manifests_carry_lineage(spark, joined, tmp_path):
     run_checkpointed(spark, joined, out, n_buckets=4, run_id="run-lineage")
     import json
 
+    from latyas_spark.pipeline.iceberg import CHECKPOINT_SCHEMA
+
     ckpt = os.path.join(out, "_checkpoint")
     total = 0
     for f in sorted(os.listdir(ckpt)):
@@ -72,22 +74,14 @@ def test_manifests_carry_lineage(spark, joined, tmp_path):
         assert m["status"] == "done"
         assert m["spans"] == sum(r["spans"] for r in m["lineage"])
         assert all(r["partition_id"] >= 0 for r in m["lineage"])
+        pids = [r["partition_id"] for r in m["lineage"]]
+        assert pids == sorted(pids)
+        # one manifest format: the JSON is the Iceberg checkpoint row
+        row = spark.createDataFrame([tuple(m.values())], schema=CHECKPOINT_SCHEMA)
+        assert list(m) == row.columns
+        assert [r.asDict(recursive=True) for r in row.collect()] == [m]
         total += m["spans"]
     assert total == read_checkpointed(spark, out).count()
-
-
-def test_concurrent_buckets_equal_sequential(spark, joined, tmp_path):
-    """max_concurrent submits bucket jobs from a thread pool; the
-    output and manifests must be identical to the sequential run."""
-    out_s = str(tmp_path / "seq")
-    out_c = str(tmp_path / "conc")
-    run_checkpointed(spark, joined, out_s, n_buckets=8)
-    summary = run_checkpointed(spark, joined, out_c, n_buckets=8, max_concurrent=4)
-    assert summary["buckets_done"] == 8
-    assert completed_buckets(out_c) == list(range(8))
-    assert _collect(read_checkpointed(spark, out_s)) == _collect(
-        read_checkpointed(spark, out_c)
-    )
 
 
 def test_resume_refuses_config_drift(spark, joined, tmp_path):
@@ -115,3 +109,15 @@ def test_resume_refuses_config_drift(spark, joined, tmp_path):
     )
     summary = run_checkpointed(spark, joined, out, n_buckets=4)
     assert summary["buckets_done"] == 2 and summary["buckets_skipped"] == 2
+
+
+def test_resume_refuses_a_different_bucket_count(spark, joined, tmp_path):
+    """The bucket count decides which docs a bucket id names: resuming
+    8 buckets as 4 would skip buckets 0-2 of the new split, of whose
+    docs the first run wrote only some, and silently drop the rest."""
+    out = str(tmp_path / "rebucket")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, joined, out, n_buckets=8, fail_after=3)
+    with pytest.raises(ValueError, match="resume config drift"):
+        run_checkpointed(spark, joined, out, n_buckets=4)
+    assert run_checkpointed(spark, joined, out, n_buckets=8)["buckets_done"] == 5
