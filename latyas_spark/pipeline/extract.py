@@ -32,6 +32,14 @@ Scale design (SURVEY.md §4.3):
   repartition by hash(doc_id) and run ``mapInPandas`` over the whole
   task partition: one python invocation per partition, per-doc groups
   split off vectorized with flatnonzero on the sorted doc_id column.
+* **Kernel stages sized by their rows.**  A Python task costs ~0.25 s
+  of worker CPU before it reads a row (docs/OPERATIONS.md), so the two
+  widths the plan chooses — the input repartition P and the mega-doc
+  page salt — are one task per ROWS_PER_TASK rows of the router's
+  count, at least one per core and at most the base width
+  max(shuffle partitions, 4x cores) (``_width_for_rows``).  A 2,000-doc
+  job runs 4 kernel tasks on 4 cores instead of 16; the 5.3M-row
+  bench shape keeps its 128.
 * **Keep the JVM out of the hot path.**  Both join inputs are
   repartitioned by doc_id so the join itself needs no exchange
   (requires spark.sql.requireAllClusterKeysForCoPartition=false, set
@@ -46,7 +54,8 @@ Scale design (SURVEY.md §4.3):
   mega docs are re-keyed by (doc_id, page) — the salt — and their
   doc-wide order is recovered with a window over the (much smaller)
   span output.  The router counts the flat sidecar (the doc_id column
-  only, map-side-combined) and collects the mega ids: the resulting
+  only, map-side-combined) and collects, in one job, the mega ids with
+  their row count and the total row count: the resulting
   ``doc_id IN (...)`` predicates are pushed by Catalyst through the
   join into BOTH parquet scans (InSet, O(1) probe), so each union
   branch scans and joins only its own documents.  A derived-column
@@ -61,7 +70,7 @@ Scale design (SURVEY.md §4.3):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
@@ -199,13 +208,16 @@ def _sorted_partition_chunks(
     input row is ~250 B on the wire (4 float64 coords, conf, 3 short
     strings, ids) and ~3x that as pandas objects, so a task holds
     ~750 B x rows_per_partition.  At the bench shape (5.3M rows / 128
-    partitions) that is ~31 MB/task — far under a worker's share.  At
-    warehouse scale, size the kernel partition count as
-    P >= total_rows * 750B / 512MB (e.g. 10^10 span rows -> P ~ 15k),
-    via spark.sql.shuffle.partitions or bucketing; _kernel_partitions
-    only enforces a floor of 4x cores.  Mega docs are page-salted
-    before this point, so no partition is dominated by one document —
-    the bound holds under document skew.
+    partitions) that is ~31 MB/task — far under a worker's share.  Where
+    _kernel_partitions narrows a small stage to fewer tasks (one per
+    ROWS_PER_TASK routed rows, so each Python task's ~0.25 s set-up
+    stays a small share of its work) a task averages at most
+    ROWS_PER_TASK = 32,768 rows, ~24 MB.  At warehouse scale, size the
+    kernel partition count as P >= total_rows * 750B / 512MB (e.g.
+    10^10 span rows -> P ~ 15k), via spark.sql.shuffle.partitions or
+    bucketing; the row rule never widens a stage past its base.  Mega
+    docs are page-salted before this point, so no partition is
+    dominated by one document — the bound holds under document skew.
     """
     parts = [pdf for pdf in batches if len(pdf)]
     if not parts:
@@ -309,22 +321,45 @@ def doc_clustering_safe(spark) -> bool:
     return subset_ok and not skew_split_on
 
 
-def _kernel_partitions(df: DataFrame) -> int:
-    """Explicit shuffle width for the kernel stage.
+# Rows one kernel task should get before a stage adds another task.
+# A Python task costs ~0.25 s of worker CPU before it reads a row
+# (docs/OPERATIONS.md, "Per-task cost"); at ~23k kernel rows/s/core
+# 32,768 rows are ~1.4 s of work, so that fixed cost stays under ~15%.
+ROWS_PER_TASK = 32_768
+
+
+def _width_for_rows(rows: Optional[int], cores: int, base_width: int) -> int:
+    """The kernel-stage sizing rule: ``base_width`` narrowed to one task
+    per ROWS_PER_TASK rows, but never below one task per core.  With
+    ``rows`` unknown (None) the width stays ``base_width``.  Whenever
+    the rule narrows a stage its tasks average at most ROWS_PER_TASK
+    rows; large jobs keep ``base_width`` (5.3M rows at 32 cores: 162
+    row-sized tasks > 128)."""
+    if rows is None:
+        return base_width
+    return min(base_width, max(cores, -(-rows // ROWS_PER_TASK)))
+
+
+def _kernel_partitions(df: DataFrame, rows: Optional[int] = None) -> int:
+    """Explicit shuffle width for a kernel stage that will process
+    ``rows`` rows (None: unknown).
 
     An explicit count keeps AQE from coalescing the exchange toward its
     64MB advisory size — the kernel is CPU-bound per row, not
-    byte-bound, so byte-based coalescing would idle most cores.  4x the
-    core count smooths stragglers (per-doc work varies by page count),
-    trading a little Arrow-batch overhead for even task waves."""
-    spark = df.sparkSession
+    byte-bound, so byte-based coalescing would idle most cores.  The
+    base width, max(shuffle partitions, 4x cores), spreads a large job
+    in even task waves; ``_width_for_rows`` narrows it for small stages,
+    because every Python task pays ~0.25 s of CPU before its first row
+    and 16 tasks over a 5k-row mega doc are mostly that fixed cost."""
+    sc = df.sparkSession.sparkContext
     base = int(
-        spark.conf.get(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism * 2),
+        df.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions", str(sc.defaultParallelism * 2)
         )
     )
-    return max(base, spark.sparkContext.defaultParallelism * 4)
+    return _width_for_rows(
+        rows, sc.defaultParallelism, max(base, sc.defaultParallelism * 4)
+    )
 
 
 # Above this many mega doc ids, routing switches from a driver-side
@@ -334,12 +369,15 @@ MAX_MEGA_INLIST = 10_000
 
 
 def _kernel(pruned: DataFrame, cfg: ExtractConfig, dual: bool,
-            page_local: bool = False, clustered: bool = False) -> DataFrame:
+            page_local: bool = False, clustered: bool = False,
+            rows: Optional[int] = None) -> DataFrame:
     """One mapInPandas kernel stage over ``pruned``.  Doc mode groups
     whole docs, re-shuffling by doc_id unless ``clustered`` promises the
     input is hash(doc_id)-clustered already (e.g. the output of a join
     whose children were distributed by doc_id); page-local mode salts
-    by (doc_id, page) so a mega doc spreads over many tasks.
+    by (doc_id, page) so a mega doc spreads over many tasks.  A stage
+    that shuffles is ``_kernel_partitions(pruned, rows)`` wide, ``rows``
+    being the router's count of its input (None: unknown).
 
     Multi-detector frames carry a ``det`` column; rows must then sort
     detector-major within a page (Layout.merge appends detector 2's
@@ -352,7 +390,7 @@ def _kernel(pruned: DataFrame, cfg: ExtractConfig, dual: bool,
         sort_cols = ("doc_id", "page", "offset")
     if not clustered:
         keys = ("doc_id", "page") if page_local else ("doc_id",)
-        pruned = pruned.repartition(_kernel_partitions(pruned), *keys)
+        pruned = pruned.repartition(_kernel_partitions(pruned, rows), *keys)
     fn = _doc_mode_kernel(
         cfg, _page_dual if dual else _page_e1, sort_cols, page_local
     )
@@ -392,21 +430,58 @@ def _doc_order(pages: DataFrame) -> DataFrame:
     )
 
 
-def _route_mega(counted: DataFrame, mega_threshold: int):
-    """The mega-doc router: ids of the docs with >= ``mega_threshold``
-    rows in ``counted``, as a collected list — or, past MAX_MEGA_INLIST
-    ids, as the id DataFrame itself."""
+class _Route(NamedTuple):
+    """What the mega-doc router found in the frame it counted.
+
+    ``mega`` holds the mega doc ids as a list or, past MAX_MEGA_INLIST
+    ids, as the id DataFrame.  ``mega_rows`` and ``rows`` count the mega
+    docs' rows and all rows; both are None when unknown (routing off,
+    or the DataFrame fallback), and the kernel widths then stay at
+    their base."""
+
+    mega: object
+    mega_rows: Optional[int] = None
+    rows: Optional[int] = None
+
+    def scaled(self, k: int) -> "_Route":
+        """The counts of a union of ``k`` sidecars shaped like the
+        counted one (multi-detector input)."""
+        if self.rows is None:
+            return self
+        return self._replace(mega_rows=self.mega_rows * k, rows=self.rows * k)
+
+
+def _route_mega(counted: DataFrame, mega_threshold: int) -> _Route:
+    """The mega-doc router: the docs with >= ``mega_threshold`` rows in
+    ``counted``, plus the row counts the kernel stages are sized by.
+
+    One driver-side collect: the per-doc counts are re-keyed by an
+    explicit ``is_mega`` flag, so each mega doc stays its own row and
+    all other docs sum into one more row.  Past MAX_MEGA_INLIST mega
+    ids the result holds the id DataFrame and no counts.
+    ``mega_threshold <= 0`` routes nothing and counts nothing."""
+    if mega_threshold <= 0:
+        return _Route([])
     counts = counted.groupBy("doc_id").count()
-    big = counts.filter(F.col("count") >= mega_threshold).select("doc_id")
-    sample = big.limit(MAX_MEGA_INLIST + 1).collect()
-    if len(sample) > MAX_MEGA_INLIST:
-        return big
-    return [r["doc_id"] for r in sample]
+    is_mega = F.col("count") >= mega_threshold
+    groups = counts.groupBy(
+        is_mega.alias("is_mega"), F.when(is_mega, F.col("doc_id")).alias("doc_id")
+    ).agg(F.sum("count").alias("rows"))
+    # one group beyond the guard's limit is the non-mega row
+    sample = groups.limit(MAX_MEGA_INLIST + 2).collect()
+    mega = [r for r in sample if r["is_mega"]]
+    if len(mega) > MAX_MEGA_INLIST:
+        return _Route(counts.filter(is_mega).select("doc_id"))
+    return _Route(
+        [r["doc_id"] for r in mega],
+        sum(r["rows"] for r in mega),
+        sum(r["rows"] for r in sample),
+    )
 
 
 def _plan(joined: DataFrame, cfg: ExtractConfig,
           mega_threshold: int = MEGA_THRESHOLD, dual: bool = False,
-          counted: Optional[DataFrame] = None, clustered: bool = False,
+          route: Optional[_Route] = None, clustered: bool = False,
           page_local: bool = False) -> DataFrame:
     """The one extraction plan every feed builds: prune ``joined`` (a
     flat span x sidecar frame) to the kernel columns, route mega docs
@@ -414,7 +489,8 @@ def _plan(joined: DataFrame, cfg: ExtractConfig,
     the two.  Feeds differ only in how they build the join, which
     they describe to the plan with:
 
-    * ``counted`` — the frame the router counts (default: ``joined``);
+    * ``route`` — the feed's ``_route_mega`` result, when it routed
+      already (default: route by counting ``joined``);
     * ``clustered`` — ``joined`` is hash(doc_id)-clustered already, so
       the doc kernel needs no exchange of its own;
     * ``page_local`` — return the page-salted kernel output as is,
@@ -422,6 +498,8 @@ def _plan(joined: DataFrame, cfg: ExtractConfig,
 
     ``mega_threshold=0`` sends every doc down the page path and
     ``mega_threshold<0`` every doc down the doc path, both unrouted.
+    The router's mega-doc row count sizes the page salt
+    (``_kernel_partitions``).
     """
     cols = list(KERNEL_COLS)
     if "det" in joined.columns:
@@ -432,9 +510,9 @@ def _plan(joined: DataFrame, cfg: ExtractConfig,
     if page_local or mega_threshold == 0:
         pages = _kernel(pruned, cfg, dual, page_local=True)
         return pages if page_local else _doc_order(pages)
-    mega = []
-    if mega_threshold > 0:
-        mega = _route_mega(pruned if counted is None else counted, mega_threshold)
+    if route is None:
+        route = _route_mega(pruned, mega_threshold)
+    mega, mega_rows, _ = route
     if isinstance(mega, DataFrame):
         ids = F.broadcast(mega)
         normal = pruned.join(ids, "doc_id", "left_anti")
@@ -444,8 +522,12 @@ def _plan(joined: DataFrame, cfg: ExtractConfig,
         normal, big = pruned.filter(~hit), pruned.filter(hit)
     else:
         return _kernel(pruned, cfg, dual, clustered=clustered)
+    # Only the page salt is sized by rows: an unclustered doc kernel keeps
+    # the base width, which Spark drops as redundant over a join of
+    # tables bucketed by doc_id into that many buckets (the checkpoint
+    # feed's zero-input-exchange doc path).
     return _kernel(normal, cfg, dual, clustered=clustered).unionByName(
-        _doc_order(_kernel(big, cfg, dual, page_local=True))
+        _doc_order(_kernel(big, cfg, dual, page_local=True, rows=mega_rows))
     )
 
 
@@ -472,9 +554,9 @@ def extract_spans_flat(
 
     Returns span rows (doc_id, order, kind, text, media_ref).  Docs
     with >= mega_threshold spans, found by counting the frame itself,
-    are routed to the page-salted path.  Set ``mega_threshold=0`` to
-    disable routing (all docs page path) or ``mega_threshold<0`` to
-    force the doc path.
+    are routed to the page-salted path, sized by their row count.  Set
+    ``mega_threshold=0`` to disable routing (all docs page path) or
+    ``mega_threshold<0`` to force the doc path.
     """
     return _plan(joined, cfg, mega_threshold, dual)
 
@@ -502,7 +584,9 @@ def extract_spans(
     native) after the C7 flip+descale.
 
     Mega docs are routed by counting the PRIMARY sidecar (module
-    docstring, "Two-path skew routing").
+    docstring, "Two-path skew routing") before the join is built, so
+    the input width P is sized by the router's row count: the kernel
+    sees about (primary rows x number of sidecars) rows.
     """
     if isinstance(layout_blocks, DataFrame):
         sidecars = [layout_blocks]
@@ -524,8 +608,9 @@ def extract_spans(
     # warehouse scale the same effect comes from bucketing both tables
     # by doc_id (warehouse.extract_from_warehouse — ZERO input shuffle);
     # this is the unbucketed equivalent.
+    route = _route_mega(sidecars[0], mega_threshold).scaled(len(sidecars))
     spans = explode_documents(documents)
-    P = _kernel_partitions(spans)
+    P = _kernel_partitions(spans, route.rows)
     joined = spans.repartition(P, "doc_id").join(
         sidecar.repartition(P, "doc_id"), ["doc_id", "offset"]
     )
@@ -534,7 +619,7 @@ def extract_spans(
         cfg,
         mega_threshold,
         dual,
-        counted=sidecars[0],
+        route=route,
         clustered=doc_clustering_safe(documents.sparkSession),
     )
 

@@ -39,6 +39,7 @@ from ..core.document import DEFAULT_CONFIG, ExtractConfig
 from .extract import (
     MEGA_THRESHOLD,
     _plan,
+    _route_mega,
     doc_clustering_safe,
     explode_documents,
 )
@@ -142,6 +143,6 @@ def extract_from_warehouse(
         colocated_join(spark, spans_table, blocks_table, ("doc_id", "offset")),
         cfg,
         mega_threshold,
-        counted=spark.table(blocks_table),
+        route=_route_mega(spark.table(blocks_table), mega_threshold),
         clustered=doc_clustering_safe(spark),
     )
